@@ -695,6 +695,10 @@ silently producing wrong results.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable, Mapping
+from contextvars import ContextVar
+from types import MappingProxyType
+from typing import NamedTuple
 
 from .chudfs import CH_UDF_NAMES
 
@@ -1199,7 +1203,24 @@ def _init_colon_types() -> None:
 
 _init_colon_types()
 
-_NAME_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+# a call site ``name(`` (``\b`` and ``\w`` exactly as ``_find_call``
+# matches a name), or the ``::`` cast operator
+_CALL_SITE_RE = re.compile(r"\b(\w+)\s*\(|::")
+
+
+def _call_names(sql: str) -> dict[str, None]:
+    """The names called in ``sql`` outside single-quoted literals (same
+    literal rule as ``_find_call``), plus ``"::"`` when the cast operator
+    appears, keyed in order of first occurrence.  A name is in the result
+    exactly when ``_find_call(sql, name) >= 0``."""
+    names: dict[str, None] = {}
+    quotes = last = 0
+    for m in _CALL_SITE_RE.finditer(sql):
+        quotes += sql.count("'", last, m.start())
+        last = m.start()
+        if not quotes % 2:
+            names.setdefault(m.group(1) or "::", None)
+    return names
 
 
 def _in_string(sql: str, idx: int) -> bool:
@@ -1213,12 +1234,9 @@ def _in_string(sql: str, idx: int) -> bool:
     return in_str
 
 
-# compiled call-site pattern per function name (r13): the translator probes
-# _find_call ~300k times per large query with ~625 distinct names, which
-# blew straight through re's 512-entry LRU — every probe recompiled its
-# pattern (measured 43 s of 54 s translating ch_dialect_array_split).
-# Keys are the fixed dialect name table, so the dict stays small and the
-# cache never invalidates.
+# compiled call-site patterns per function name: the names come from the
+# fixed rule table (~650 of them, past re's 512-entry LRU), so the dict
+# stays small and never invalidates
 _CALL_RE_CACHE: dict[str, "re.Pattern[str]"] = {}
 
 
@@ -1226,17 +1244,7 @@ def _find_call(sql: str, name: str, start: int = 0) -> int:
     """Index of the next ``name(`` call site (word-boundary match) at or
     after ``start`` that is OUTSIDE string literals, or -1.  Matching
     inside a literal would corrupt data values — e.g. a row containing
-    the text ``any(`` must never be rewritten.
-
-    r14 fast path: the translator runs ~625 single-name passes per
-    translation unit and recursion multiplies the units, so the vast
-    majority of probes are for names that do not appear in the string at
-    all.  One C-level ``str.find`` answers those in ~0.1 µs before any
-    regex/dict machinery is touched (the r13 cached-regex probe still
-    cost ~7 µs of Python plumbing per miss — 2.1 s of the 2.3 s
-    translation wall on ch_dialect_array_split)."""
-    if sql.find(name, start) < 0:
-        return -1
+    the text ``any(`` must never be rewritten."""
     pats = _CALL_RE_CACHE.get(name)
     if pats is None:
         pats = (
@@ -1248,9 +1256,6 @@ def _find_call(sql: str, name: str, start: int = 0) -> int:
         )
         _CALL_RE_CACHE[name] = pats
     pat, pat_at_start = pats
-    # finditer(sql, start) avoids copying the tail per probe (the probe
-    # count is ~300k per large query); the only semantic difference vs the
-    # old slice scan is \b at the start boundary, handled by pat_at_start
     if start and pat_at_start.match(sql, start) and not _in_string(sql, start):
         return start
     for m in pat.finditer(sql, start):
@@ -1310,22 +1315,35 @@ def _split_args(arglist: str) -> list[str]:
     return out
 
 
-def _rewrite_calls(sql: str, name: str, emit) -> str:
+def _rewrite_calls(sql: str, name: str, emit, raw: bool = False) -> str:
     """Rewrite every ``name(args)`` call via ``emit(args: list[str]) -> str``,
     innermost-safe (args are recursively translated before emission).  An
     emitter may RECONSTRUCT the call unchanged (``name(...)``) to decline a
     form it doesn't own — e.g. ANSI ``EXTRACT(unit FROM x)`` vs ClickHouse
-    ``extract(s, 're')``; the scan then advances past it instead of looping."""
-    if name not in sql:  # r14: C-level gate before any loop machinery
-        return sql
+    ``extract(s, 're')``; the scan then advances past it instead of looping.
+
+    ``raw``: hand ``emit`` the RAW (untranslated) argument text and leave
+    whatever it returns for the later rules to translate — for emitters
+    that classify by the original CH spelling (the byte-hash width gate
+    must tell ``toUInt32(x)`` from ``toInt64(x)``, which the cast rule
+    collapses to the same ``CAST(x AS BIGINT)``).
+
+    A ``str`` emit renames the call (``name(`` → ``emit(``), arguments
+    untouched."""
     pos = 0
     while True:
         at = _find_call(sql, name, pos)
         if at < 0:
             return sql
         open_idx = sql.index("(", at)
+        if isinstance(emit, str):
+            sql = sql[:at] + emit + sql[open_idx:]
+            pos = at + len(emit)
+            continue
         end = _balanced(sql, open_idx)
-        args = [_translate_functions(a) for a in _split_args(sql[open_idx + 1 : end - 1])]
+        args = _split_args(sql[open_idx + 1 : end - 1])
+        if not raw:
+            args = [_translate_functions(a) for a in args]
         rep = emit(args)
         sql = sql[:at] + rep + sql[end:]
         # advance past the replacement whenever it still CONTAINS a
@@ -2085,7 +2103,7 @@ def _stringish(arg: str) -> bool:
     if len(s) >= 2 and s[0] == "'" and s[-1] == "'":
         return True
     if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", s):
-        return s.lower() in _STRING_COLUMNS
+        return s.lower() in _CATALOG.get().strings
     return bool(_STRING_PRODUCERS.match(s))
 
 
@@ -2246,27 +2264,6 @@ def _recentre_signed(expr: str, a0: str, width_bytes: int) -> str:
     half = 1 << (bits - 1)
     return (f"CAST(pmod({expr} + {half}, {1 << bits}) - {half}"
             f" AS BIGINT)")
-
-
-def _rewrite_calls_raw(sql: str, name: str, emit) -> str:
-    """Like ``_rewrite_calls`` but hands ``emit`` the RAW (untranslated)
-    argument text and re-embeds whatever it returns for the later passes
-    to translate.  Needed when classification depends on the original CH
-    spelling — e.g. the byte-hash width gate must distinguish
-    ``toUInt32(x)`` from ``toInt64(x)``, which the cast pass collapses to
-    the same ``CAST(x AS BIGINT)``."""
-    if name not in sql:  # r14: C-level gate before any loop machinery
-        return sql
-    pos = 0
-    while True:
-        at = _find_call(sql, name, pos)
-        if at < 0:
-            return sql
-        open_idx = sql.index("(", at)
-        end = _balanced(sql, open_idx)
-        rep = emit(_split_args(sql[open_idx + 1 : end - 1]))
-        sql = sql[:at] + rep + sql[end:]
-        pos = at + len(rep) if _find_call(rep, name) >= 0 else at
 
 
 def _ttest_fn(name: str):
@@ -3089,43 +3086,71 @@ def _min_sample_size(kind: str):
     return rw
 
 
-def _translate_functions(sql: str) -> str:
+_Rule = tuple[tuple[str, ...], Callable[[str], str]]
+
+
+def _build_rules() -> list[_Rule]:
+    """The function-translation rules, in application order: each is
+    ``(names, apply)`` — ``apply(sql) -> sql`` runs when one of ``names``
+    is a call site of the text (see ``_translate_functions``)."""
+    rules: list[_Rule] = []
+
+    def _call(name: str, emit, raw: bool = False) -> None:
+        """A ``_rewrite_calls`` rule (a ``str`` emit is a rename)."""
+        rules.append(((name,), lambda sql: _rewrite_calls(sql, name, emit,
+                                                          raw)))
+
+    def _on(names: str, fn: Callable[[str], str]) -> None:
+        """A whole-string pass gated on the space-separated ``names``."""
+        rules.append((tuple(names.split()), fn))
+
+    def _pass(fn, name: str, *args, **kwargs) -> None:
+        """A pass ``fn(sql, name, *args, **kwargs)`` gated on ``name``."""
+        _on(name, lambda sql: fn(sql, name, *args, **kwargs))
+
     # byte-hash family FIRST, on RAW argument text: the integer-width
     # detection reads the to[U]Int64()/to[U]Int32() wrapper spelling
     # before the cast pass collapses widths, and the string gate reads
     # raw CH function names
-    sql = _rewrite_calls_raw(
-        sql, "sipHash64",
+    _call(
+        "sipHash64",
         _byte_hash_fn("sipHash64", "ch_siphash64", "ch_siphash64_u64",
                       r"^to(U)?Int64\s*\("),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "xxHash64",
+    _call(
+        "xxHash64",
         _byte_hash_fn("xxHash64", "ch_xxhash64_ch", "ch_xxhash64_u64",
                       r"^to(U)?Int64\s*\("),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "xxHash32",
+    _call(
+        "xxHash32",
         _byte_hash_fn("xxHash32", "ch_xxhash32_ch", "ch_xxhash32_u32",
                       r"^to(U)?Int32\s*\("),
+        raw=True,
     )
     # xxh3 = XXH3_64bits seed 0 (r9: former refusal; the algorithm AND
     # the embedded default secret are both proven against the system
     # libxxhash — zero recall surface, see chudfs XXH3 section)
-    sql = _rewrite_calls_raw(
-        sql, "xxh3",
+    _call(
+        "xxh3",
         _byte_hash_fn("xxh3", "ch_xxh3_ch", "ch_xxh3_u64",
                       r"^to(U)?Int64\s*\("),
+        raw=True,
     )
     # `expr::ChType` cast operator: Spark supports :: natively — only
     # the CH type NAME needs mapping (unknown names pass through for
     # Spark's own types like ::INT); literal-aware so a string datum
     # containing '::Int64' is never rewritten
-    sql = _COLON_CAST_RE.sub(
-        lambda m: m.group(0) if _in_string(sql, m.start())
-        else "::" + _COLON_TYPES.get(m.group(1), m.group(1)),
-        sql,
-    )
+    def _colon_cast_pass(sql: str) -> str:
+        return _COLON_CAST_RE.sub(
+            lambda m: m.group(0) if _in_string(sql, m.start())
+            else "::" + _COLON_TYPES.get(m.group(1), m.group(1)),
+            sql,
+        )
+
+    _on("::", _colon_cast_pass)
     # CRC family (case-insensitive in CH; common spellings covered).
     # Plain CRC32 deliberately passes through: Spark's builtin crc32 IS
     # the zlib variant CH's CRC32 uses.  CRC32IEEE/CRC64 are the init-0
@@ -3138,17 +3163,18 @@ def _translate_functions(sql: str) -> str:
         ("CRC64", "ch_crc64", "CRC64"),
         ("crc64", "ch_crc64", "CRC64"),
     ):
-        sql = _rewrite_calls_raw(sql, _sp, _crc_fn(_cn, _udf))
+        _call(_sp, _crc_fn(_cn, _udf), raw=True)
     # r8 hash-family completion (verification basis in chudfs.py):
     # cityHash64 is CH's default Distributed sharding expression,
     # intHash32 the canonical SAMPLE BY hash.  Same typed-argument gate
     # as the sipHash64 trio; the 128-bit-output forms are string-only
     # (no integer width to pin), so _NO_INT sends ints to the refusal.
     _NO_INT = r"(?!)"
-    sql = _rewrite_calls_raw(
-        sql, "cityHash64",
+    _call(
+        "cityHash64",
         _byte_hash_fn("cityHash64", "ch_cityhash64_ch", "ch_cityhash64_u64",
                       r"^to(U)?Int64\s*\("),
+        raw=True,
     )
     # wyHash64 (r11, previously refused): wyhash final version 3 with
     # seed 0 — the revision CH's contrib pins, settled EMPIRICALLY in
@@ -3156,82 +3182,92 @@ def _translate_functions(sql: str) -> str:
     # 12336419557878201794 plus all seven published f3 vectors across
     # every length branch; final v4 matches neither).  String-only —
     # CH's own signature is wyHash64(string).
-    sql = _rewrite_calls_raw(
-        sql, "wyHash64",
+    _call(
+        "wyHash64",
         _byte_hash_fn("wyHash64", "ch_wyhash64", "ch_wyhash64", _NO_INT),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "murmurHash2_32",
+    _call(
+        "murmurHash2_32",
         _byte_hash_fn("murmurHash2_32", "ch_murmur2_32_ch",
                       "ch_murmur2_32_u32", r"^to(U)?Int32\s*\("),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "murmurHash2_64",
+    _call(
+        "murmurHash2_64",
         _byte_hash_fn("murmurHash2_64", "ch_murmur2_64_ch",
                       "ch_murmur2_64_u64", r"^to(U)?Int64\s*\("),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "murmurHash3_32",
+    _call(
+        "murmurHash3_32",
         _byte_hash_fn("murmurHash3_32", "ch_murmur3_32_ch",
                       "ch_murmur3_32_u32", r"^to(U)?Int32\s*\("),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "murmurHash3_64",
+    _call(
+        "murmurHash3_64",
         _byte_hash_fn("murmurHash3_64", "ch_murmur3_64_ch",
                       "ch_murmur3_64_u64", r"^to(U)?Int64\s*\("),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "murmurHash3_128",
+    _call(
+        "murmurHash3_128",
         _byte_hash_fn("murmurHash3_128", "ch_murmur3_128_ch",
                       "ch_murmur3_128_ch", _NO_INT),
+        raw=True,
     )
     # keyed SipHash family + the OFFICIAL 128-bit form (r9; libsodium
     # crypto_shorthash / crypto_shorthash_siphashx24 bit-equality proofs
     # in tests/test_chhashes.py).  Longer names rewrite first so the
     # word-boundary scanner never sees a prefix of an unprocessed call.
-    sql = _rewrite_calls_raw(
-        sql, "sipHash128ReferenceKeyed",
+    _call(
+        "sipHash128ReferenceKeyed",
         _keyed_sip_fn("sipHash128ReferenceKeyed", "ch_siphash128_ref_keyed",
                       "ch_siphash128_ref_keyed", _NO_INT),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "sipHash128Reference",
+    _call(
+        "sipHash128Reference",
         _byte_hash_fn("sipHash128Reference", "ch_siphash128_ref",
                       "ch_siphash128_ref", _NO_INT),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "sipHash128Keyed",
+    _call(
+        "sipHash128Keyed",
         _keyed_sip_fn("sipHash128Keyed", "ch_siphash128_keyed",
                       "ch_siphash128_keyed", _NO_INT),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "sipHash64Keyed",
+    _call(
+        "sipHash64Keyed",
         _keyed_sip_fn("sipHash64Keyed", "ch_siphash64_keyed",
                       "ch_siphash64_keyed_u64", r"^to(U)?Int64\s*\("),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "sipHash128",
+    _call(
+        "sipHash128",
         _byte_hash_fn("sipHash128", "ch_siphash128_ch",
                       "ch_siphash128_ch", _NO_INT),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "intHash32", _int_hash_fn("intHash32", "ch_inthash32"))
-    sql = _rewrite_calls_raw(
-        sql, "intHash64", _int_hash_fn("intHash64", "ch_inthash64"))
+    _call("intHash32", _int_hash_fn("intHash32", "ch_inthash32"), raw=True)
+    _call("intHash64", _int_hash_fn("intHash64", "ch_inthash64"), raw=True)
     # farmFingerprint64 = farmhash's PORTABLE Fingerprint64, Guava-proven
     # (farmHash64 stays refused: per-CPU build dispatch)
-    sql = _rewrite_calls_raw(
-        sql, "farmFingerprint64",
+    _call(
+        "farmFingerprint64",
         _byte_hash_fn("farmFingerprint64", "ch_farm_fingerprint64_ch",
                       "ch_farm_fingerprint64_u64", r"^to(U)?Int64\s*\("),
+        raw=True,
     )
     # javaHash/hiveHash: JLS String.hashCode (SIGNED Int32 like CH);
     # string-typed arguments only — CH's integer forms hash Java
     # primitive widths the SQL text can't see
     for _jn, _judf in (("javaHash", "ch_java_hash"),
                        ("hiveHash", "ch_hive_hash")):
-        sql = _rewrite_calls_raw(
-            sql, _jn,
+        _call(
+            _jn,
             lambda a, n=_jn, u=_judf: (
                 f"{u}({a[0].strip()})" if len(a) == 1
                 and _stringish(a[0].strip())
@@ -3239,6 +3275,7 @@ def _translate_functions(sql: str) -> str:
                     f"{n} translates for string-typed arguments only"
                     " (the integer forms hash Java primitive widths,"
                     " invisible at SQL-text level)")),
+            raw=True,
         )
     # ngramDistance/ngramSearch family (r9): exact 4-gram multiset
     # measures — mode literal picks byte/codepoint units and case fold
@@ -3246,30 +3283,32 @@ def _translate_functions(sql: str) -> str:
                       ("ngramSearch", "ch_ngram_search")):
         for _suffix, _mode in (("CaseInsensitiveUTF8", 3), ("UTF8", 2),
                                ("CaseInsensitive", 1), ("", 0)):
-            sql = _rewrite_calls(
-                sql, _nd + _suffix,
+            _call(
+                _nd + _suffix,
                 lambda a, u=_udf, m=_mode, n=_nd + _suffix: (
                     f"{u}({a[0]}, {a[1]}, {m})" if len(a) == 2
                     else _refuse(f"{n} takes exactly 2 string arguments")),
             )
     # jumpConsistentHash(key, n): Lamping-Veach published algorithm
-    sql = _rewrite_calls_raw(
-        sql, "jumpConsistentHash",
+    _call(
+        "jumpConsistentHash",
         lambda a: (
             f"ch_jump_consistent_hash(CAST({a[0]} AS BIGINT),"
             f" CAST({a[1]} AS INT))"
             if len(a) == 2 and not _stringish(a[0].strip())
             else _refuse(
                 "jumpConsistentHash takes (integer key, bucket count)")),
+        raw=True,
     )
     # byteSwap / bitRotateLeft/Right: the result wraps at the argument's
     # DECLARED width — an explicit to[U]IntN wrapper supplies it
-    sql = _rewrite_calls_raw(
-        sql, "byteSwap",
+    _call(
+        "byteSwap",
         _width_gated_fn(
             "byteSwap", 1,
             lambda a, w: _recentre_signed(
                 f"ch_byteswap({a[0]}, {w})", a[0], w)),
+        raw=True,
     )
     # sumWithOverflow: CH keeps the ARGUMENT type and lets it wrap;
     # Spark's ANSI sum raises instead — exact wrapping via a DECIMAL(38)
@@ -3288,9 +3327,10 @@ def _translate_functions(sql: str) -> str:
         half = 1 << (bits - 1)
         return (f"CAST(COALESCE(pmod({body} + {half}, {1 << bits})"
                 f" - {half}, 0) AS BIGINT)")
-    sql = _rewrite_calls_raw(
-        sql, "sumWithOverflow",
+    _call(
+        "sumWithOverflow",
         _width_gated_fn("sumWithOverflow", 1, _sum_overflow),
+        raw=True,
     )
     # sumMapWithOverflow (r10, previously refused): the sumMap fold
     # composed with the modular width-wrap above.  RAW args (like
@@ -3302,38 +3342,39 @@ def _translate_functions(sql: str) -> str:
     # case): the sumMapFiltered per-row map_filter composed into the
     # modular fold.  RAW inner args for the same reason as the unfiltered
     # form; the keep list translates normally.
-    while True:
-        at = _find_call(sql, "sumMapFilteredWithOverflow")
-        if at < 0:
-            break
-        open1 = sql.index("(", at)
-        end1 = _balanced(sql, open1)
-        rest = sql[end1:].lstrip()
-        if not rest.startswith("("):
-            raise ChTranslationError(
-                "sumMapFilteredWithOverflow requires the"
-                " (keys_to_keep)(keys, values) combinator form")
-        open2 = end1 + (len(sql[end1:]) - len(rest))
-        end2 = _balanced(sql, open2)
-        keep = _translate_functions(sql[open1 + 1 : end1 - 1]).strip()
-        inner = _split_args(sql[open2 + 1 : end2 - 1])
-        sql = (sql[:at] + _sum_map_overflow(inner, keep=keep)
-               + sql[end2:])
-    sql = _rewrite_calls_raw(sql, "sumMapWithOverflow", _sum_map_overflow)
+    def _sum_map_filtered_with_overflow_pass(sql: str) -> str:
+        while True:
+            at = _find_call(sql, "sumMapFilteredWithOverflow")
+            if at < 0:
+                break
+            open1 = sql.index("(", at)
+            end1 = _balanced(sql, open1)
+            rest = sql[end1:].lstrip()
+            if not rest.startswith("("):
+                raise ChTranslationError(
+                    "sumMapFilteredWithOverflow requires the"
+                    " (keys_to_keep)(keys, values) combinator form")
+            open2 = end1 + (len(sql[end1:]) - len(rest))
+            end2 = _balanced(sql, open2)
+            keep = _translate_functions(sql[open1 + 1 : end1 - 1]).strip()
+            inner = _split_args(sql[open2 + 1 : end2 - 1])
+            sql = (sql[:at] + _sum_map_overflow(inner, keep=keep)
+                   + sql[end2:])
+        return sql
+
+    _on("sumMapFilteredWithOverflow", _sum_map_filtered_with_overflow_pass)
+    _call("sumMapWithOverflow", _sum_map_overflow, raw=True)
     # geohash — Niemeyer's published scheme; decode returns the CELL
     # CENTER (longitude, latitude) like CH
-    sql = _rewrite_calls(
-        sql, "geohashEncode",
+    _call(
+        "geohashEncode",
         lambda a: (
             f"ch_geohash_encode(CAST({a[0]} AS DOUBLE),"
             f" CAST({a[1]} AS DOUBLE), {a[2] if len(a) > 2 else 12})"
             if len(a) in (2, 3)
             else _refuse("geohashEncode(longitude, latitude[, precision])")),
     )
-    sql = _rewrite_calls(
-        sql, "geohashDecode",
-        lambda a: f"ch_geohash_decode({a[0]})",
-    )
+    _call("geohashDecode", lambda a: f"ch_geohash_decode({a[0]})")
     # OGC WKT parsers (r10, previously refused): boost::geometry
     # conventions CH inherits — Point tuple, Ring from the POLYGON
     # spelling, Polygon = outer ring + holes, MultiPolygon nesting.
@@ -3344,14 +3385,14 @@ def _translate_functions(sql: str) -> str:
                      ("readWKTRing", "ch_read_wkt_ring"),
                      ("readWKTPolygon", "ch_read_wkt_polygon"),
                      ("readWKTMultiPolygon", "ch_read_wkt_multipolygon")):
-        sql = _rewrite_calls(
-            sql, _wn,
+        _call(
+            _wn,
             lambda a, u=_wu, n=_wn: (
                 f"{u}({a[0]})" if len(a) == 1
                 else _refuse(f"{n} takes one WKT string")),
         )
-    sql = _rewrite_calls(
-        sql, "geohashesInBox",
+    _call(
+        "geohashesInBox",
         lambda a: (
             f"ch_geohashes_in_box(CAST({a[0]} AS DOUBLE),"
             f" CAST({a[1]} AS DOUBLE), CAST({a[2]} AS DOUBLE),"
@@ -3361,21 +3402,23 @@ def _translate_functions(sql: str) -> str:
                 "geohashesInBox(longitude_min, latitude_min,"
                 " longitude_max, latitude_max, precision)")),
     )
-    sql = _rewrite_calls_raw(
-        sql, "bitRotateLeft",
+    _call(
+        "bitRotateLeft",
         _width_gated_fn(
             "bitRotateLeft", 2,
             lambda a, w: _recentre_signed(
                 f"ch_bit_rotate_left(CAST({a[0]} AS BIGINT),"
                 f" CAST({a[1]} AS BIGINT), {w})", a[0], w)),
+        raw=True,
     )
-    sql = _rewrite_calls_raw(
-        sql, "bitRotateRight",
+    _call(
+        "bitRotateRight",
         _width_gated_fn(
             "bitRotateRight", 2,
             lambda a, w: _recentre_signed(
                 f"ch_bit_rotate_right(CAST({a[0]} AS BIGINT),"
                 f" CAST({a[1]} AS BIGINT), {w})", a[0], w)),
+        raw=True,
     )
     # CH hex() pads integers to EVEN width (hex(1) = '01' — whole bytes,
     # leading zero-bytes trimmed); Spark's hex(1) = '1'.  The even-pad
@@ -3388,21 +3431,15 @@ def _translate_functions(sql: str) -> str:
     _AZ = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
     _az = "abcdefghijklmnopqrstuvwxyz"
     for nm_l in ("lower", "lcase"):
-        sql = _rewrite_calls(
-            sql, nm_l,
-            lambda a: f"translate({a[0]}, '{_AZ}', '{_az}')",
-        )
+        _call(nm_l, lambda a: f"translate({a[0]}, '{_AZ}', '{_az}')")
     for nm_u in ("upper", "ucase"):
-        sql = _rewrite_calls(
-            sql, nm_u,
-            lambda a: f"translate({a[0]}, '{_az}', '{_AZ}')",
-        )
+        _call(nm_u, lambda a: f"translate({a[0]}, '{_az}', '{_AZ}')")
     # CH char(n, ...) builds a string from raw BYTES (each argument cast
     # to UInt8 — char(228,189,160) is the UTF-8 of 你); Spark's char(n)
     # is a single Unicode CODEPOINT, so ≥128 silently diverges and
     # multi-arg fails.  Byte-faithful via hex assembly → unhex → string.
-    sql = _rewrite_calls(
-        sql, "char",
+    _call(
+        "char",
         lambda a: (
             "CAST(unhex(concat("
             + ", ".join(
@@ -3417,8 +3454,8 @@ def _translate_functions(sql: str) -> str:
     # CH bin() pads integers to whole BYTES (bin(1) = '00000001');
     # Spark's bin(1) = '1'.  Emitted as BIN( for the same
     # never-re-match-own-output reason as hex below.
-    sql = _rewrite_calls(
-        sql, "bin",
+    _call(
+        "bin",
         lambda a: (
             "element_at(transform(array(BIN(" + a[0] + ")), __b ->"
             " lpad(__b, CAST(ceil(length(__b) / 8.0) * 8 AS INT), '0')), 1)"
@@ -3429,8 +3466,8 @@ def _translate_functions(sql: str) -> str:
     # unbin (r9): inverse of bin — byte-faithful via the Arrow UDF +
     # CAST(binary AS STRING) raw-byte copy (the char() pattern); CH's
     # implementation-defined non-[01] result maps to NULL (chudfs note)
-    sql = _rewrite_calls(
-        sql, "unbin",
+    _call(
+        "unbin",
         lambda a: (
             f"CAST(ch_unbin({a[0]}) AS STRING)"
             if len(a) == 1
@@ -3439,8 +3476,8 @@ def _translate_functions(sql: str) -> str:
     )
     # emitted as HEX( — the case-sensitive scanner must never re-match
     # its own output on argument re-traversal (Spark is case-insensitive)
-    sql = _rewrite_calls(
-        sql, "hex",
+    _call(
+        "hex",
         lambda a: (
             "element_at(transform(array(HEX(" + a[0] + ")), __h ->"
             " IF(pmod(length(__h), 2) = 1, concat('0', __h), __h)), 1)"
@@ -3451,40 +3488,38 @@ def _translate_functions(sql: str) -> str:
     # cryptographic digests: CH returns RAW BYTES (FixedString) where
     # Spark's builtins return hex STRINGS — unhex() restores CH semantics
     # so the idiomatic hex(MD5(s)) doesn't silently double-hex
-    sql = _rewrite_calls(sql, "MD5", lambda a: f"unhex(md5({a[0]}))")
-    sql = _rewrite_calls(sql, "SHA1", lambda a: f"unhex(sha1({a[0]}))")
+    _call("MD5", lambda a: f"unhex(md5({a[0]}))")
+    _call("SHA1", lambda a: f"unhex(sha1({a[0]}))")
     for bits in (224, 256, 384, 512):
-        sql = _rewrite_calls(
-            sql, f"SHA{bits}",
-            lambda a, b=bits: f"unhex(sha2({a[0]}, {b}))",
-        )
-    sql = _rewrite_calls_raw(
-        sql, "halfMD5",
+        _call(f"SHA{bits}", lambda a, b=bits: f"unhex(sha2({a[0]}, {b}))")
+    _call(
+        "halfMD5",
         _byte_hash_fn("halfMD5", "ch_halfmd5", "ch_halfmd5_u64",
                       r"^to(U)?Int64\s*\("),
+        raw=True,
     )
     # CH length() is BYTE length on strings (lengthUTF8 counts chars) and
     # element count on arrays; Spark's length() counts chars.  Runs EARLY
     # so only user-written length() is rewritten — later rewrites that
     # EMIT length(...) mean Spark char semantics and stay untouched.
-    sql = _rewrite_calls(
-        sql, "length",
+    _call(
+        "length",
         lambda a: _len_expr(a[0], str_fn="octet_length")
         if len(a) == 1
         else _refuse("length with more than one argument"),
     )
-    sql = _rewrite_calls(sql, "welchTTest", _ttest_fn("welchTTest"))
-    sql = _rewrite_calls(sql, "studentTTest", _ttest_fn("studentTTest"))
-    sql = _mann_whitney_pass(sql)
-    sql = _ks_test_pass(sql)
+    _call("welchTTest", _ttest_fn("welchTTest"))
+    _call("studentTTest", _ttest_fn("studentTTest"))
+    _on("mannWhitneyUTest", _mann_whitney_pass)
+    _on("kolmogorovSmirnovTest", _ks_test_pass)
     # largestTriangleThreeBuckets/lttb (r10, previously refused):
     # Steinarsson 2013's published reference bucket rule (floor
     # boundaries, next-bucket mean, strict > so the earliest maximal
     # candidate wins), sorted by (x, y) for deterministic ties — one
     # collect_list fold per group (grouped-stats contract)
     for _ln in ("largestTriangleThreeBuckets", "lttb"):
-        sql = _rewrite_parametric(
-            sql, _ln,
+        _pass(_rewrite_parametric,
+            _ln,
             lambda p, a, n=_ln: (
                 f"ch_lttb(collect_list(CASE WHEN ({a[0]}) IS NOT NULL"
                 f" AND ({a[1]}) IS NOT NULL THEN named_struct("
@@ -3495,14 +3530,14 @@ def _translate_functions(sql: str) -> str:
                     f"{n}(n_buckets)(x, y) with a literal integer"
                     " bucket count")),
         )
-    sql = _rewrite_parametric(sql, "meanZTest", _mean_z_test)
+    _pass(_rewrite_parametric, "meanZTest", _mean_z_test)
     # analysisOfVariance(value, group): one-way ANOVA — moments + exact
     # incomplete-beta p in ONE Arrow UDF over the group's pair array
     # (the mannWhitneyUTest contract; F(1,n) = t(n)^2 cross-checked in
     # tests against the t-table-pinned Student CDF)
     for _anova_name in ("analysisOfVariance", "anova"):
-        sql = _rewrite_calls(
-            sql, _anova_name,
+        _call(
+            _anova_name,
             lambda a, n=_anova_name: (
                 f"ch_anova(collect_list(CASE WHEN ({a[0]}) IS NOT NULL"
                 f" AND ({a[1]}) IS NOT NULL THEN named_struct("
@@ -3512,8 +3547,8 @@ def _translate_functions(sql: str) -> str:
                 else _refuse(f"{n}(value, group_index) takes 2 arguments")),
         )
     # groupArraySorted(N)(x): the N smallest values, ascending — exact
-    sql = _rewrite_parametric(
-        sql, "groupArraySorted",
+    _pass(_rewrite_parametric,
+        "groupArraySorted",
         lambda p_, a: (
             f"slice(sort_array(collect_list({a[0]})), 1, {int(p_)})"
             if len(a) == 1 and re.fullmatch(r"\d+", p_.strip())
@@ -3521,33 +3556,31 @@ def _translate_functions(sql: str) -> str:
                 "groupArraySorted(N)(x) takes a literal N and one"
                 " argument")),
     )
-    sql = _rewrite_calls(sql, "proportionsZTest", _proportions_z_test)
-    sql = _rewrite_calls(sql, "rankCorr", _rank_corr)
+    _call("proportionsZTest", _proportions_z_test)
+    _call("rankCorr", _rank_corr)
     # BiasCorrected first: its name contains the plain cramersV prefix
-    sql = _rewrite_calls(sql, "cramersVBiasCorrected",
-                         _assoc_fn("cramersVBiasCorrected"))
-    sql = _rewrite_calls(sql, "cramersV", _assoc_fn("cramersV"))
-    sql = _rewrite_calls(sql, "contingency", _assoc_fn("contingency"))
-    sql = _rewrite_calls(sql, "theilsU", _assoc_fn("theilsU"))
-    sql = _rewrite_calls(sql, "pointInPolygon", _point_in_polygon)
+    _call("cramersVBiasCorrected", _assoc_fn("cramersVBiasCorrected"))
+    _call("cramersV", _assoc_fn("cramersV"))
+    _call("contingency", _assoc_fn("contingency"))
+    _call("theilsU", _assoc_fn("theilsU"))
+    _call("pointInPolygon", _point_in_polygon)
     # polygonAreaCartesian: signed shoelace per ring, negated to the
     # boost::geometry clockwise-positive orientation CH inherits (the CH
     # docs example [[(0,0),(0,5),(5,5)]] = 12.5 fixes the sign; holes
     # are spelled counterclockwise and subtract naturally).  Perimeter:
     # Euclidean edge lengths incl. the auto-closing edge.  Both need
     # polygon LITERALS like pointInPolygon.  r9 refusal closures.
-    sql = _rewrite_calls(
-        sql, "polygonAreaCartesian",
+    _call(
+        "polygonAreaCartesian",
         _polygon_fold_fn(
             "polygonAreaCartesian",
             "__p1.x * __p2.y - __p2.x * __p1.y",
             "(-({f}) / 2)",
         ),
     )
-    sql = _rewrite_calls(
-        sql, "polygonConvexHullCartesian", _convex_hull_fold)
-    sql = _rewrite_calls(
-        sql, "polygonPerimeterCartesian",
+    _call("polygonConvexHullCartesian", _convex_hull_fold)
+    _call(
+        "polygonPerimeterCartesian",
         _polygon_fold_fn(
             "polygonPerimeterCartesian",
             "sqrt(power(__p2.x - __p1.x, 2) + power(__p2.y - __p1.y, 2))",
@@ -3572,14 +3605,14 @@ def _translate_functions(sql: str) -> str:
             f" ELSE concat(__fx, repeat(chr(0),"
             f" {n} - octet_length(__fx))) END), 1)"
         )
-    sql = _rewrite_calls(sql, "toFixedString", _to_fixed_string)
+    _call("toFixedString", _to_fixed_string)
     # countDigits: decimal digits of the argument's UNDERLYING integer
     # (Decimal counts value*10^scale), sign and point stripped, leading
     # zeros dropped, floor 1 (countDigits(0) = 1).  Integer/Decimal
     # arguments only — CH errors on floats; a float here would count
     # the characters of Spark's E-notation rendering instead.
-    sql = _rewrite_calls(
-        sql, "countDigits",
+    _call(
+        "countDigits",
         lambda a: (
             f"GREATEST(length(regexp_replace(translate("
             f"CAST({a[0]} AS STRING), '-.', ''), '^0+', '')), 1)"
@@ -3587,8 +3620,8 @@ def _translate_functions(sql: str) -> str:
     )
     # bitSlice: 1-based BIT slicing; returns BINARY (CH's String return
     # can carry arbitrary bytes, which Spark strings cannot)
-    sql = _rewrite_calls(
-        sql, "bitSlice",
+    _call(
+        "bitSlice",
         lambda a: (
             f"ch_bit_slice(CAST({a[0]} AS BINARY), CAST({a[1]} AS INT),"
             f" {f'CAST({a[2]} AS INT)' if len(a) == 3 else 'NULL'})"
@@ -3598,8 +3631,8 @@ def _translate_functions(sql: str) -> str:
     # arrayZipUnaligned: zip padding the SHORTER side with NULLs — which
     # is exactly Spark zip_with's native behavior (arrayZip, by
     # contrast, throws on unequal lengths in CH and stays a rename)
-    sql = _rewrite_calls(
-        sql, "arrayZipUnaligned",
+    _call(
+        "arrayZipUnaligned",
         lambda a: (
             f"zip_with({a[0]}, {a[1]},"
             f" (__zu_x, __zu_y) -> named_struct('_1', __zu_x,"
@@ -3613,8 +3646,8 @@ def _translate_functions(sql: str) -> str:
     # lambda forms refuse: CH sorts by an arbitrary (k, v) function,
     # and sort_array has no comparator.
     for _ms, _rev in (("mapSort", "false"), ("mapReverseSort", "true")):
-        sql = _rewrite_calls(
-            sql, _ms,
+        _call(
+            _ms,
             lambda a, rev=_rev, n=_ms: (
                 f"map_from_entries(sort_array(map_entries({a[0]}),"
                 f" {'false' if rev == 'true' else 'true'}))"
@@ -3626,8 +3659,8 @@ def _translate_functions(sql: str) -> str:
         )
     # arrayAUC: tie-averaged rank-sum AUC (the trapezoid-on-tie-groups
     # rule CH computes; pinned to the CH docs example in pytest)
-    sql = _rewrite_calls(
-        sql, "arrayAUC",
+    _call(
+        "arrayAUC",
         lambda a: (
             f"ch_array_auc({a[0]}, {a[1]})" if len(a) == 2
             else _refuse(
@@ -3639,8 +3672,8 @@ def _translate_functions(sql: str) -> str:
     # (13/72, 19/72, 13/19) re-derives EXACTLY from the published
     # formula — chudfs note.  One UDF call, let-bound to the CH tuple
     # shape via the single-element transform idiom.
-    sql = _rewrite_calls(
-        sql, "arrayNormalizedGini",
+    _call(
+        "arrayNormalizedGini",
         lambda a: (
             "element_at(transform(array("
             f"ch_array_normalized_gini({a[0]}, {a[1]})), __gn ->"
@@ -3648,23 +3681,20 @@ def _translate_functions(sql: str) -> str:
             "), 1)" if len(a) == 2
             else _refuse("arrayNormalizedGini takes (predicted, label)")),
     )
-    sql = _rewrite_calls(
-        sql, "minSampleSizeConversion", _min_sample_size("conversion"))
-    sql = _rewrite_calls(
-        sql, "minSampleSizeContinous", _min_sample_size("continous"))
+    _call("minSampleSizeConversion", _min_sample_size("conversion"))
+    _call("minSampleSizeContinous", _min_sample_size("continous"))
     # CH documents the correctly-spelled alias of its (sic) Continous name
-    sql = _rewrite_calls(
-        sql, "minSampleSizeContinuous", _min_sample_size("continous"))
-    sql = _rewrite_window_funnel(sql)
-    sql = _rewrite_sequence(
-        sql, "sequenceMatch",
+    _call("minSampleSizeContinuous", _min_sample_size("continous"))
+    _on("windowFunnel", _rewrite_window_funnel)
+    _pass(_rewrite_sequence,
+        "sequenceMatch",
         lambda seq, rx: f"CAST({seq} RLIKE '{rx}' AS INT)",
     )
-    sql = _rewrite_sequence(
-        sql, "sequenceCount",
+    _pass(_rewrite_sequence,
+        "sequenceCount",
         lambda seq, rx: f"CAST(regexp_count({seq}, '{rx}') AS INT)",
     )
-    sql = _rewrite_calls(sql, "retention", _retention)
+    _call("retention", _retention)
     # --- generic aggregate combinators: expand STRUCTURALLY first, so the
     # emitted base call is translated by its own rule further down ---
     for base in _COMBINATOR_BASES:
@@ -3674,37 +3704,35 @@ def _translate_functions(sql: str) -> str:
             # kurtosis+3) that cannot take a trailing FILTER — dedicated
             # rules below push the FILTER onto the inner aggregates
             continue
-        sql = _rewrite_calls(
-            sql, f"{base}If",
+        _call(
+            f"{base}If",
             lambda a, b=base: (
                 f"{b}({', '.join(a[:-1])}) FILTER (WHERE {a[-1]})"
                 if len(a) >= 2
                 else _refuse(f"{b}If without a condition argument")
             ),
         )
-    sql = _rewrite_calls(
-        sql, "avgWeightedIf",
+    _call(
+        "avgWeightedIf",
         lambda a: (
             f"try_divide(sum(({a[0]}) * ({a[1]})) FILTER (WHERE {a[2]}), "
             f"sum({a[1]}) FILTER (WHERE {a[2]}))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "kurtPopIf",
+    _call(
+        "kurtPopIf",
         lambda a: f"(kurtosis({a[0]}) FILTER (WHERE {a[1]}) + 3)",
     )
     for base in _ORNULL_IDENTITY:
-        sql = _rewrite_calls(
-            sql, f"{base}OrNull", lambda a, b=base: f"{b}({', '.join(a)})"
-        )
+        _call(f"{base}OrNull", lambda a, b=base: f"{b}({', '.join(a)})")
     for base in _ORNULL_COUNTING:
-        sql = _rewrite_calls(
-            sql, f"{base}OrNull",
+        _call(
+            f"{base}OrNull",
             lambda a, b=base: f"nullif({b}({', '.join(a)}), 0)",
         )
     for base in ("groupArray", "groupUniqArray"):
-        sql = _rewrite_calls(
-            sql, f"{base}OrNull",
+        _call(
+            f"{base}OrNull",
             # the duplicated aggregate call dedups into one buffer
             lambda a, b=base: (
                 f"IF(size({b}({', '.join(a)})) = 0, NULL, "
@@ -3712,20 +3740,18 @@ def _translate_functions(sql: str) -> str:
             ),
         )
     for base in _ORDEFAULT_ZERO:
-        sql = _rewrite_calls(
-            sql, f"{base}OrDefault",
+        _call(
+            f"{base}OrDefault",
             lambda a, b=base: f"coalesce({b}({', '.join(a)}), 0)",
         )
     for base in ("count", "uniq", "uniqExact", "countDistinct",
                  "groupArray", "groupUniqArray"):
         # already 0 / [] on empty groups — -OrDefault is the plain call
-        sql = _rewrite_calls(
-            sql, f"{base}OrDefault", lambda a, b=base: f"{b}({', '.join(a)})"
-        )
+        _call(f"{base}OrDefault", lambda a, b=base: f"{b}({', '.join(a)})")
     for nm in ("anyOrDefault", "anyLastOrDefault", "argMinOrDefault",
                "argMaxOrDefault"):
-        sql = _rewrite_calls(
-            sql, nm,
+        _call(
+            nm,
             lambda a, n=nm: _refuse(
                 f"{n} (the CH default depends on the argument's type, "
                 "unknowable at SQL-text level — use coalesce(...OrNull, "
@@ -3734,62 +3760,51 @@ def _translate_functions(sql: str) -> str:
         )
     # countIf: CH's 1-arg form counts rows where cond; the 2-arg form
     # counts non-NULL x where cond (Spark's count_if is 1-arg only)
-    sql = _rewrite_calls(
-        sql, "countIf",
+    _call(
+        "countIf",
         lambda a: (
             f"count_if({a[0]})"
             if len(a) == 1
             else f"count({a[0]}) FILTER (WHERE {a[1]})"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "countDistinct", lambda a: f"count(DISTINCT {', '.join(a)})"
-    )
+    _call("countDistinct", lambda a: f"count(DISTINCT {', '.join(a)})")
     for ch, unit in _TRUNCS.items():
-        sql = _rewrite_calls(sql, ch, lambda a, u=unit: f"date_trunc('{u}', {a[0]})")
+        _call(ch, lambda a, u=unit: f"date_trunc('{u}', {a[0]})")
     # -OrNull / -OrZero safe-cast variants: OrNull → TRY_CAST; OrZero →
     # the reference's bad-data type default (0 / '' / Epoch —
     # parser/fastjson.go:582-621)
     for ch, ty in _CASTS.items():
-        sql = _rewrite_calls(
-            sql, f"{ch}OrNull", lambda a, t=ty: f"TRY_CAST({a[0]} AS {t})"
-        )
+        _call(f"{ch}OrNull", lambda a, t=ty: f"TRY_CAST({a[0]} AS {t})")
         zero = {"STRING": "''", "BOOLEAN": "FALSE"}.get(ty, "0")
-        sql = _rewrite_calls(
-            sql,
+        _call(
             f"{ch}OrZero",
             lambda a, t=ty, z=zero: f"COALESCE(TRY_CAST({a[0]} AS {t}), {z})",
         )
-    sql = _rewrite_calls(
-        sql, "toDateOrNull", lambda a: f"TRY_CAST({a[0]} AS DATE)"
-    )
-    sql = _rewrite_calls(
-        sql,
+    _call("toDateOrNull", lambda a: f"TRY_CAST({a[0]} AS DATE)")
+    _call(
         "toDateOrZero",
         lambda a: f"COALESCE(TRY_CAST({a[0]} AS DATE), DATE '1970-01-01')",
     )
-    sql = _rewrite_calls(
-        sql, "toDateTimeOrNull", lambda a: f"TRY_CAST({a[0]} AS TIMESTAMP)"
-    )
-    sql = _rewrite_calls(
-        sql,
+    _call("toDateTimeOrNull", lambda a: f"TRY_CAST({a[0]} AS TIMESTAMP)")
+    _call(
         "toDateTimeOrZero",
         lambda a: (
             f"COALESCE(TRY_CAST({a[0]} AS TIMESTAMP), "
             "TIMESTAMP '1970-01-01 00:00:00')"
         ),
     )
-    sql = _rewrite_calls(sql, "accurateCastOrNull", _accurate_cast_or_null)
-    sql = _rewrite_calls(sql, "accurateCast", _accurate_cast)
+    _call("accurateCastOrNull", _accurate_cast_or_null)
+    _call("accurateCast", _accurate_cast)
     for _mx, _mf in (("corrMatrix", "corr"),
                      ("covarSampMatrix", "covar_samp"),
                      ("covarPopMatrix", "covar_pop")):
-        sql = _rewrite_calls(sql, _mx, _matrix_agg_fn(_mx, _mf))
-    sql = _rewrite_calls(sql, "groupArrayIntersect", _group_array_intersect)
+        _call(_mx, _matrix_agg_fn(_mx, _mf))
+    _call("groupArrayIntersect", _group_array_intersect)
     # bit positions of set bits, LSB-first (UInt64 domain via the
     # unsigned shift)
-    sql = _rewrite_calls(
-        sql, "bitPositionsToArray",
+    _call(
+        "bitPositionsToArray",
         lambda a: (
             f"filter(transform(sequence(0, 63), __bp -> "
             f"IF((shiftrightunsigned(CAST({a[0]} AS BIGINT), __bp) & 1) "
@@ -3798,244 +3813,257 @@ def _translate_functions(sql: str) -> str:
     )
     # IPv4StringToNum variants: the base form zero-defaults (reference
     # parser convention); OrNull NULLs instead, OrDefault IS the base
-    sql = _rewrite_calls(
-        sql, "IPv4StringToNumOrNull",
+    _call(
+        "IPv4StringToNumOrNull",
         lambda a: (
             f"IF({a[0]} RLIKE '{_IPV4_RE_SQL}', "
             + _ipv4_string_to_num(a) + ", CAST(NULL AS BIGINT))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "IPv4StringToNumOrDefault", _ipv4_string_to_num)
+    _call("IPv4StringToNumOrDefault", _ipv4_string_to_num)
     # URL-safe base64 (CH strips '=' padding; docs example pinned)
-    sql = _rewrite_calls(
-        sql, "base64URLEncode", lambda a: f"ch_b64url_encode({a[0]})")
-    sql = _rewrite_calls(
-        sql, "base64URLDecode", lambda a: f"ch_b64url_decode({a[0]})")
-    sql = _rewrite_calls(
-        sql, "tryBase64URLDecode",
-        lambda a: f"ch_b64url_try_decode({a[0]})")
+    _call("base64URLEncode", lambda a: f"ch_b64url_encode({a[0]})")
+    _call("base64URLDecode", lambda a: f"ch_b64url_decode({a[0]})")
+    _call("tryBase64URLDecode", lambda a: f"ch_b64url_try_decode({a[0]})")
     for ch, ty in _CASTS.items():
-        sql = _rewrite_calls(sql, ch, lambda a, t=ty: f"CAST({a[0]} AS {t})")
+        _call(ch, lambda a, t=ty: f"CAST({a[0]} AS {t})")
     for ch, agg in _AGG_IF.items():
-        sql = _rewrite_calls(
-            sql, ch, lambda a, g=agg: f"{g}({a[0]}) FILTER (WHERE {a[1]})"
-        )
-    sql = _rewrite_calls(
-        sql, "uniqExactIf",
+        _call(ch, lambda a, g=agg: f"{g}({a[0]}) FILTER (WHERE {a[1]})")
+    _call(
+        "uniqExactIf",
         lambda a: f"count(DISTINCT {a[0]}) FILTER (WHERE {a[1]})",
     )
     # uniqUpTo(N)(x): exact distinct count while ≤ N, pinned at N+1 beyond
-    while True:
-        at = _find_call(sql, "uniqUpTo")
-        if at < 0:
-            break
-        open1 = sql.index("(", at)
-        end1 = _balanced(sql, open1)
-        rest = sql[end1:].lstrip()
-        if not rest.startswith("("):
-            raise ChTranslationError("uniqUpTo requires the (N)(x) combinator form")
-        open2 = end1 + (len(sql[end1:]) - len(rest))
-        end2 = _balanced(sql, open2)
-        n_raw = sql[open1 + 1 : end1 - 1].strip()
-        try:
-            n = int(n_raw)
-        except ValueError as e:
-            raise ChTranslationError(
-                f"uniqUpTo requires an integer literal N, got {n_raw!r}"
-            ) from e
-        x = _translate_functions(sql[open2 + 1 : end2 - 1]).strip()
-        sql = sql[:at] + f"LEAST(count(DISTINCT {x}), {n + 1})" + sql[end2:]
+    def _uniq_up_to_pass(sql: str) -> str:
+        while True:
+            at = _find_call(sql, "uniqUpTo")
+            if at < 0:
+                break
+            open1 = sql.index("(", at)
+            end1 = _balanced(sql, open1)
+            rest = sql[end1:].lstrip()
+            if not rest.startswith("("):
+                raise ChTranslationError("uniqUpTo requires the (N)(x) combinator form")
+            open2 = end1 + (len(sql[end1:]) - len(rest))
+            end2 = _balanced(sql, open2)
+            n_raw = sql[open1 + 1 : end1 - 1].strip()
+            try:
+                n = int(n_raw)
+            except ValueError as e:
+                raise ChTranslationError(
+                    f"uniqUpTo requires an integer literal N, got {n_raw!r}"
+                ) from e
+            x = _translate_functions(sql[open2 + 1 : end2 - 1]).strip()
+            sql = sql[:at] + f"LEAST(count(DISTINCT {x}), {n + 1})" + sql[end2:]
+        return sql
+
+    _on("uniqUpTo", _uniq_up_to_pass)
     # topK(N)(x): CH's approximate heavy-hitters list, computed EXACTLY
     # here — per-group frequency fold over one collect_list (Spark dedups
     # the two textually identical aggregate calls into a single buffer);
     # ties broken by value ascending where CH's order is unspecified
-    while True:
-        at = _find_call(sql, "topK")
-        if at < 0:
-            break
-        open1 = sql.index("(", at)
-        end1 = _balanced(sql, open1)
-        rest = sql[end1:].lstrip()
-        if not rest.startswith("("):
-            raise ChTranslationError("topK requires the (N)(x) combinator form")
-        open2 = end1 + (len(sql[end1:]) - len(rest))
-        end2 = _balanced(sql, open2)
-        n_raw = sql[open1 + 1 : end1 - 1].strip()
-        try:
-            n = int(n_raw)
-        except ValueError as e:
-            raise ChTranslationError(
-                f"topK requires an integer literal N, got {n_raw!r}"
-            ) from e
-        x = _translate_functions(sql[open2 + 1 : end2 - 1]).strip()
-        cl = f"collect_list({x})"
-        expr = (
-            f"slice(transform(array_sort(transform(array_distinct({cl}), "
-            f"__tk_v -> struct(-size(filter({cl}, "
-            f"__tk_e -> __tk_e <=> __tk_v)) AS __tk_c, __tk_v AS __tk_v))), "
-            f"__tk_s -> __tk_s.__tk_v), 1, {n})"
-        )
-        sql = sql[:at] + expr + sql[end2:]
+    def _top_k_pass(sql: str) -> str:
+        while True:
+            at = _find_call(sql, "topK")
+            if at < 0:
+                break
+            open1 = sql.index("(", at)
+            end1 = _balanced(sql, open1)
+            rest = sql[end1:].lstrip()
+            if not rest.startswith("("):
+                raise ChTranslationError("topK requires the (N)(x) combinator form")
+            open2 = end1 + (len(sql[end1:]) - len(rest))
+            end2 = _balanced(sql, open2)
+            n_raw = sql[open1 + 1 : end1 - 1].strip()
+            try:
+                n = int(n_raw)
+            except ValueError as e:
+                raise ChTranslationError(
+                    f"topK requires an integer literal N, got {n_raw!r}"
+                ) from e
+            x = _translate_functions(sql[open2 + 1 : end2 - 1]).strip()
+            cl = f"collect_list({x})"
+            expr = (
+                f"slice(transform(array_sort(transform(array_distinct({cl}), "
+                f"__tk_v -> struct(-size(filter({cl}, "
+                f"__tk_e -> __tk_e <=> __tk_v)) AS __tk_c, __tk_v AS __tk_v))), "
+                f"__tk_s -> __tk_s.__tk_v), 1, {n})"
+            )
+            sql = sql[:at] + expr + sql[end2:]
+        return sql
+
+    _on("topK", _top_k_pass)
     # topKWeighted(N)(x, w): like topK but ranked by the SUM OF WEIGHTS
     # per value (CH AggregateFunctionTopK weighted variant), computed
     # exactly over one collect_list of (value, weight) structs; ties by
     # value ascending, as the repo's topK
-    while True:
-        at = _find_call(sql, "topKWeighted")
-        if at < 0:
-            break
-        open1 = sql.index("(", at)
-        end1 = _balanced(sql, open1)
-        rest = sql[end1:].lstrip()
-        if not rest.startswith("("):
-            raise ChTranslationError(
-                "topKWeighted requires the (N)(x, weight) combinator form"
+    def _top_k_weighted_pass(sql: str) -> str:
+        while True:
+            at = _find_call(sql, "topKWeighted")
+            if at < 0:
+                break
+            open1 = sql.index("(", at)
+            end1 = _balanced(sql, open1)
+            rest = sql[end1:].lstrip()
+            if not rest.startswith("("):
+                raise ChTranslationError(
+                    "topKWeighted requires the (N)(x, weight) combinator form"
+                )
+            open2 = end1 + (len(sql[end1:]) - len(rest))
+            end2 = _balanced(sql, open2)
+            n_raw = sql[open1 + 1 : end1 - 1].strip()
+            try:
+                n = int(n_raw)
+            except ValueError as e:
+                raise ChTranslationError(
+                    f"topKWeighted requires an integer literal N, got {n_raw!r}"
+                ) from e
+            inner = _split_args(sql[open2 + 1 : end2 - 1])
+            if len(inner) != 2:
+                raise ChTranslationError("topKWeighted takes (N)(x, weight)")
+            x = _translate_functions(inner[0]).strip()
+            w = _translate_functions(inner[1]).strip()
+            # a row with a NULL value OR weight is skipped entirely (CH
+            # aggregate-argument semantics); collect_list drops the NULL the
+            # CASE produces.  Without this, a NULL weight-sum struct would
+            # sort FIRST (nulls-first) and wrongly top the list.
+            cl = (
+                f"collect_list(CASE WHEN ({x}) IS NOT NULL "
+                f"AND ({w}) IS NOT NULL THEN named_struct('v', {x}, "
+                f"'w', CAST({w} AS BIGINT)) END)"
             )
-        open2 = end1 + (len(sql[end1:]) - len(rest))
-        end2 = _balanced(sql, open2)
-        n_raw = sql[open1 + 1 : end1 - 1].strip()
-        try:
-            n = int(n_raw)
-        except ValueError as e:
-            raise ChTranslationError(
-                f"topKWeighted requires an integer literal N, got {n_raw!r}"
-            ) from e
-        inner = _split_args(sql[open2 + 1 : end2 - 1])
-        if len(inner) != 2:
-            raise ChTranslationError("topKWeighted takes (N)(x, weight)")
-        x = _translate_functions(inner[0]).strip()
-        w = _translate_functions(inner[1]).strip()
-        # a row with a NULL value OR weight is skipped entirely (CH
-        # aggregate-argument semantics); collect_list drops the NULL the
-        # CASE produces.  Without this, a NULL weight-sum struct would
-        # sort FIRST (nulls-first) and wrongly top the list.
-        cl = (
-            f"collect_list(CASE WHEN ({x}) IS NOT NULL "
-            f"AND ({w}) IS NOT NULL THEN named_struct('v', {x}, "
-            f"'w', CAST({w} AS BIGINT)) END)"
-        )
-        expr = (
-            f"slice(transform(array_sort(transform("
-            f"array_distinct(transform({cl}, __tw_e -> __tw_e.v)), "
-            f"__tw_v -> struct(-aggregate(filter({cl}, "
-            f"__tw_f -> __tw_f.v <=> __tw_v), CAST(0 AS BIGINT), "
-            f"(__tw_s, __tw_g) -> __tw_s + __tw_g.w) AS __tw_c, "
-            f"__tw_v AS __tw_v))), "
-            f"__tw_o -> __tw_o.__tw_v), 1, {n})"
-        )
-        sql = sql[:at] + expr + sql[end2:]
+            expr = (
+                f"slice(transform(array_sort(transform("
+                f"array_distinct(transform({cl}, __tw_e -> __tw_e.v)), "
+                f"__tw_v -> struct(-aggregate(filter({cl}, "
+                f"__tw_f -> __tw_f.v <=> __tw_v), CAST(0 AS BIGINT), "
+                f"(__tw_s, __tw_g) -> __tw_s + __tw_g.w) AS __tw_c, "
+                f"__tw_v AS __tw_v))), "
+                f"__tw_o -> __tw_o.__tw_v), 1, {n})"
+            )
+            sql = sql[:at] + expr + sql[end2:]
+        return sql
+
+    _on("topKWeighted", _top_k_weighted_pass)
     # groupArrayInsertAt(default[, size])(x, pos): place x at position pos
     # (0-based), holes filled with the explicit default.  CH's bare form
     # fills holes with the TYPE default, which is unknowable at SQL-text
     # level — that form is refused with a rewrite hint.  Duplicate
     # positions: CH keeps "any" value; here the minimum non-null value
     # survives (deterministic where CH is not — noted)
-    while True:
-        at = _find_call(sql, "groupArrayInsertAt")
-        if at < 0:
-            break
-        open1 = sql.index("(", at)
-        end1 = _balanced(sql, open1)
-        rest = sql[end1:].lstrip()
-        if not rest.startswith("("):
-            raise ChTranslationError(
-                "groupArrayInsertAt needs the parameterized "
-                "groupArrayInsertAt(default[, size])(x, pos) form — the "
-                "bare form's hole filler is the column TYPE's default, "
-                "unknowable at SQL-text level; pass it explicitly"
+    def _group_array_insert_at_pass(sql: str) -> str:
+        while True:
+            at = _find_call(sql, "groupArrayInsertAt")
+            if at < 0:
+                break
+            open1 = sql.index("(", at)
+            end1 = _balanced(sql, open1)
+            rest = sql[end1:].lstrip()
+            if not rest.startswith("("):
+                raise ChTranslationError(
+                    "groupArrayInsertAt needs the parameterized "
+                    "groupArrayInsertAt(default[, size])(x, pos) form — the "
+                    "bare form's hole filler is the column TYPE's default, "
+                    "unknowable at SQL-text level; pass it explicitly"
+                )
+            open2 = end1 + (len(sql[end1:]) - len(rest))
+            end2 = _balanced(sql, open2)
+            params = [
+                _translate_functions(p)
+                for p in _split_args(sql[open1 + 1 : end1 - 1])
+            ]
+            if len(params) not in (1, 2):
+                raise ChTranslationError(
+                    "groupArrayInsertAt takes (default[, size]) parameters"
+                )
+            inner = _split_args(sql[open2 + 1 : end2 - 1])
+            if len(inner) != 2:
+                raise ChTranslationError("groupArrayInsertAt takes (x, pos)")
+            x = _translate_functions(inner[0]).strip()
+            pos = _translate_functions(inner[1]).strip()
+            default = params[0]
+            cl = f"collect_list(named_struct('p', CAST({pos} AS INT), 'x', {x}))"
+            sz = (
+                f"CAST({params[1]} AS INT)"
+                if len(params) == 2
+                else f"aggregate({cl}, 0, (__gm, __ge) -> "
+                     f"GREATEST(__gm, __ge.p + 1))"
             )
-        open2 = end1 + (len(sql[end1:]) - len(rest))
-        end2 = _balanced(sql, open2)
-        params = [
-            _translate_functions(p)
-            for p in _split_args(sql[open1 + 1 : end1 - 1])
-        ]
-        if len(params) not in (1, 2):
-            raise ChTranslationError(
-                "groupArrayInsertAt takes (default[, size]) parameters"
+            expr = _bind_arr(
+                f"named_struct('l', {cl}, 's', {sz})",
+                lambda st: (
+                    f"transform(slice(sequence(0, GREATEST({st}.s - 1, 0)), 1, "
+                    f"GREATEST({st}.s, 0)), __gi -> coalesce(array_min("
+                    f"transform(filter({st}.l, __ge -> __ge.p = __gi), "
+                    f"__gx -> __gx.x)), {default}))"
+                ),
             )
-        inner = _split_args(sql[open2 + 1 : end2 - 1])
-        if len(inner) != 2:
-            raise ChTranslationError("groupArrayInsertAt takes (x, pos)")
-        x = _translate_functions(inner[0]).strip()
-        pos = _translate_functions(inner[1]).strip()
-        default = params[0]
-        cl = f"collect_list(named_struct('p', CAST({pos} AS INT), 'x', {x}))"
-        sz = (
-            f"CAST({params[1]} AS INT)"
-            if len(params) == 2
-            else f"aggregate({cl}, 0, (__gm, __ge) -> "
-                 f"GREATEST(__gm, __ge.p + 1))"
-        )
-        expr = _bind_arr(
-            f"named_struct('l', {cl}, 's', {sz})",
-            lambda st: (
-                f"transform(slice(sequence(0, GREATEST({st}.s - 1, 0)), 1, "
-                f"GREATEST({st}.s, 0)), __gi -> coalesce(array_min("
-                f"transform(filter({st}.l, __ge -> __ge.p = __gi), "
-                f"__gx -> __gx.x)), {default}))"
-            ),
-        )
-        sql = sql[:at] + expr + sql[end2:]
+            sql = sql[:at] + expr + sql[end2:]
+        return sql
+
+    _on("groupArrayInsertAt", _group_array_insert_at_pass)
     # sumMapFiltered([keys])(k, v): sumMap restricted to the listed keys —
     # the per-row map is filtered BEFORE the merge fold, so dropped keys
     # never enter the aggregate state (same shape CH builds)
-    while True:
-        at = _find_call(sql, "sumMapFiltered")
-        if at < 0:
-            break
-        open1 = sql.index("(", at)
-        end1 = _balanced(sql, open1)
-        rest = sql[end1:].lstrip()
-        if not rest.startswith("("):
-            raise ChTranslationError(
-                "sumMapFiltered requires the (keys_to_keep)(keys, values) "
-                "combinator form"
+    def _sum_map_filtered_pass(sql: str) -> str:
+        while True:
+            at = _find_call(sql, "sumMapFiltered")
+            if at < 0:
+                break
+            open1 = sql.index("(", at)
+            end1 = _balanced(sql, open1)
+            rest = sql[end1:].lstrip()
+            if not rest.startswith("("):
+                raise ChTranslationError(
+                    "sumMapFiltered requires the (keys_to_keep)(keys, values) "
+                    "combinator form"
+                )
+            open2 = end1 + (len(sql[end1:]) - len(rest))
+            end2 = _balanced(sql, open2)
+            keep = _translate_functions(sql[open1 + 1 : end1 - 1]).strip()
+            inner = _split_args(sql[open2 + 1 : end2 - 1])
+            if len(inner) != 2:
+                raise ChTranslationError(
+                    "sumMapFiltered takes (keys_to_keep)(keys, values)"
+                )
+            k = _translate_functions(inner[0]).strip()
+            v = _translate_functions(inner[1]).strip()
+            row = (
+                f"map_filter(map_from_arrays({k}, {v}), "
+                f"(__mk, __mv) -> array_contains({keep}, __mk))"
             )
-        open2 = end1 + (len(sql[end1:]) - len(rest))
-        end2 = _balanced(sql, open2)
-        keep = _translate_functions(sql[open1 + 1 : end1 - 1]).strip()
-        inner = _split_args(sql[open2 + 1 : end2 - 1])
-        if len(inner) != 2:
-            raise ChTranslationError(
-                "sumMapFiltered takes (keys_to_keep)(keys, values)"
+            expr = _agg_map(
+                [row], "coalesce(__a, 0) + coalesce(__b, 0)", "sumMapFiltered"
             )
-        k = _translate_functions(inner[0]).strip()
-        v = _translate_functions(inner[1]).strip()
-        row = (
-            f"map_filter(map_from_arrays({k}, {v}), "
-            f"(__mk, __mv) -> array_contains({keep}, __mk))"
-        )
-        expr = _agg_map(
-            [row], "coalesce(__a, 0) + coalesce(__b, 0)", "sumMapFiltered"
-        )
-        sql = sql[:at] + expr + sql[end2:]
-    sql = _rewrite_quantile(sql, "quantileExactIf", "percentile", agg_if=True)
-    sql = _rewrite_quantile(
-        sql, "quantileTimingIf", "percentile_approx", agg_if=True
+            sql = sql[:at] + expr + sql[end2:]
+        return sql
+
+    _on("sumMapFiltered", _sum_map_filtered_pass)
+    _pass(_rewrite_quantile, "quantileExactIf", "percentile", agg_if=True)
+    _pass(_rewrite_quantile,
+        "quantileTimingIf", "percentile_approx", agg_if=True
     )
-    sql = _rewrite_quantile(sql, "quantileIf", "percentile_approx", agg_if=True)
-    sql = _rewrite_quantile(
-        sql, "quantilesExactWeighted", "percentile", wrap_array=True, weighted=True
+    _pass(_rewrite_quantile, "quantileIf", "percentile_approx", agg_if=True)
+    _pass(_rewrite_quantile,
+        "quantilesExactWeighted", "percentile", wrap_array=True, weighted=True
     )
-    sql = _rewrite_quantile(
-        sql, "quantileExactWeighted", "percentile", weighted=True
+    _pass(_rewrite_quantile,
+        "quantileExactWeighted", "percentile", weighted=True
     )
-    sql = _rewrite_quantile(sql, "quantilesExact", "percentile", wrap_array=True)
-    sql = _rewrite_quantile(sql, "quantilesTiming", "percentile_approx", wrap_array=True)
-    sql = _rewrite_quantile(sql, "quantiles", "percentile_approx", wrap_array=True)
-    sql = _rewrite_quantile(sql, "quantileExact", "percentile")
+    _pass(_rewrite_quantile, "quantilesExact", "percentile", wrap_array=True)
+    _pass(_rewrite_quantile, "quantilesTiming", "percentile_approx", wrap_array=True)
+    _pass(_rewrite_quantile, "quantiles", "percentile_approx", wrap_array=True)
+    _pass(_rewrite_quantile, "quantileExact", "percentile")
     # quantileDD(relative_accuracy, level)(x): the DDSketch estimator —
     # drop the accuracy knob and ride the shared approx sketch (same
     # one-sketch-for-all-estimators policy as TDigest/BFloat16)
-    sql = _rewrite_calls(
-        sql, "quantilesDD",
+    _call(
+        "quantilesDD",
         lambda a: f"quantiles({', '.join(q.strip() for q in a[1:])})"
         if len(a) >= 2 else _refuse("quantilesDD takes (accuracy, p…)"),
     )
-    sql = _rewrite_calls(
-        sql, "quantileDD",
+    _call(
+        "quantileDD",
         lambda a: f"quantileTDigest({a[1].strip()})"
         if len(a) == 2 else _refuse("quantileDD takes (accuracy, p)"),
     )
@@ -4046,54 +4074,40 @@ def _translate_functions(sql: str) -> str:
         "quantileBFloat16",
         "quantileTiming",
     ):
-        sql = _rewrite_quantile(sql, qname, "percentile_approx")
-    sql = _rewrite_quantile(sql, "quantile", "percentile_approx")
-    sql = _rewrite_calls(
-        sql, "medianExactWeighted",
-        lambda a: f"percentile({a[0]}, 0.5, {a[1]})",
-    )
-    sql = _rewrite_calls(sql, "medianExact", lambda a: f"percentile({a[0]}, 0.5)")
-    sql = _rewrite_calls(sql, "median", lambda a: f"percentile_approx({a[0]}, 0.5)")
-    sql = _rewrite_calls(sql, "sumDistinct", lambda a: f"sum(DISTINCT {a[0]})")
+        _pass(_rewrite_quantile, qname, "percentile_approx")
+    _pass(_rewrite_quantile, "quantile", "percentile_approx")
+    _call("medianExactWeighted", lambda a: f"percentile({a[0]}, 0.5, {a[1]})")
+    _call("medianExact", lambda a: f"percentile({a[0]}, 0.5)")
+    _call("median", lambda a: f"percentile_approx({a[0]}, 0.5)")
+    _call("sumDistinct", lambda a: f"sum(DISTINCT {a[0]})")
     # groupBitmap(x) returns the CARDINALITY of the bitmap — exact distinct
-    sql = _rewrite_calls(sql, "groupBitmap", lambda a: f"count(DISTINCT {a[0]})")
+    _call("groupBitmap", lambda a: f"count(DISTINCT {a[0]})")
     # nanosecond epoch forms: Spark timestamps are µs — ns scale by 1000
-    sql = _rewrite_calls(
-        sql, "toUnixTimestamp64Nano", lambda a: f"(unix_micros({a[0]}) * 1000)"
-    )
-    sql = _rewrite_calls(
-        sql,
+    _call("toUnixTimestamp64Nano", lambda a: f"(unix_micros({a[0]}) * 1000)")
+    _call(
         "fromUnixTimestamp64Nano",
         lambda a: f"timestamp_micros(CAST(({a[0]}) DIV 1000 AS BIGINT))",
     )
-    sql = _rewrite_calls(sql, "caseWithExpression", _case_with_expression)
+    _call("caseWithExpression", _case_with_expression)
     for mname, combine in (
         ("sumMap", "coalesce(__a, 0) + coalesce(__b, 0)"),
         ("minMap", "LEAST(__a, __b)"),
         ("maxMap", "GREATEST(__a, __b)"),
     ):
-        sql = _rewrite_calls(
-            sql, mname, lambda a, c=combine, n=mname: _agg_map(a, c, n)
-        )
-    sql = _rewrite_calls(sql, "toDateTime64", _to_datetime64)
-    sql = _rewrite_calls(sql, "toYYYYMMDD", lambda a: f"CAST(date_format({a[0]}, 'yyyyMMdd') AS INT)")
-    sql = _rewrite_calls(sql, "toYYYYMM", lambda a: f"CAST(date_format({a[0]}, 'yyyyMM') AS INT)")
+        _call(mname, lambda a, c=combine, n=mname: _agg_map(a, c, n))
+    _call("toDateTime64", _to_datetime64)
+    _call("toYYYYMMDD", lambda a: f"CAST(date_format({a[0]}, 'yyyyMMdd') AS INT)")
+    _call("toYYYYMM", lambda a: f"CAST(date_format({a[0]}, 'yyyyMM') AS INT)")
     # CH toDayOfWeek: 1=Monday..7=Sunday; Spark dayofweek: 1=Sunday..7
-    sql = _rewrite_calls(
-        sql, "toDayOfWeek", lambda a: f"(((dayofweek({a[0]}) + 5) % 7) + 1)"
-    )
+    _call("toDayOfWeek", lambda a: f"(((dayofweek({a[0]}) + 5) % 7) + 1)")
     for ch, unit in _ADD_UNITS.items():
-        sql = _rewrite_calls(
-            sql, ch, lambda a, u=unit: f"timestampadd({u}, {a[1]}, {a[0]})"
-        )
+        _call(ch, lambda a, u=unit: f"timestampadd({u}, {a[1]}, {a[0]})")
     for ch, unit in _SUB_UNITS.items():
-        sql = _rewrite_calls(
-            sql, ch, lambda a, u=unit: f"timestampadd({u}, -({a[1]}), {a[0]})"
-        )
-    sql = _rewrite_calls(sql, "dateDiff", _date_diff)
-    sql = _rewrite_calls(sql, "formatDateTime", _format_datetime)
-    sql = _rewrite_calls(
-        sql, "position",
+        _call(ch, lambda a, u=unit: f"timestampadd({u}, -({a[1]}), {a[0]})")
+    _call("dateDiff", _date_diff)
+    _call("formatDateTime", _format_datetime)
+    _call(
+        "position",
         # CH: position(haystack, needle[, start]) is case-SENSITIVE;
         # Spark locate flips args.  Emit locate() directly — an instr()
         # spelling here would be re-rewritten by the later instr→
@@ -4104,39 +4118,33 @@ def _translate_functions(sql: str) -> str:
         else f"position({a[0]})",
     )
     # scalar bit ops (CH function aliases of the operators)
-    sql = _rewrite_calls(sql, "bitAnd", lambda a: f"(({a[0]}) & ({a[1]}))")
-    sql = _rewrite_calls(sql, "bitOr", lambda a: f"(({a[0]}) | ({a[1]}))")
-    sql = _rewrite_calls(sql, "bitXor", lambda a: f"(({a[0]}) ^ ({a[1]}))")
-    sql = _rewrite_calls(sql, "bitNot", lambda a: f"(~({a[0]}))")
-    sql = _rewrite_calls(sql, "bitCount", lambda a: f"bit_count({a[0]})")
+    _call("bitAnd", lambda a: f"(({a[0]}) & ({a[1]}))")
+    _call("bitOr", lambda a: f"(({a[0]}) | ({a[1]}))")
+    _call("bitXor", lambda a: f"(({a[0]}) ^ ({a[1]}))")
+    _call("bitNot", lambda a: f"(~({a[0]}))")
+    _call("bitCount", lambda a: f"bit_count({a[0]})")
     # bitTest returns UInt8 0/1 in CH (summable), not a boolean
-    sql = _rewrite_calls(
-        sql, "bitTest",
-        lambda a: f"(shiftright({a[0]}, {a[1]}) & 1)",
-    )
-    sql = _rewrite_calls(sql, "uniqExact", lambda a: f"count(DISTINCT {', '.join(a)})")
-    sql = _rewrite_calls(
-        sql, "intDivOrZero",
+    _call("bitTest", lambda a: f"(shiftright({a[0]}, {a[1]}) & 1)")
+    _call("uniqExact", lambda a: f"count(DISTINCT {', '.join(a)})")
+    _call(
+        "intDivOrZero",
         lambda a: f"(CASE WHEN ({a[1]}) = 0 THEN 0 ELSE ({a[0]}) DIV ({a[1]}) END)",
     )
-    sql = _rewrite_calls(
-        sql, "moduloOrZero",
+    _call(
+        "moduloOrZero",
         lambda a: f"(CASE WHEN ({a[1]}) = 0 THEN 0 ELSE ({a[0]}) % ({a[1]}) END)",
     )
-    sql = _rewrite_calls(sql, "intDiv", lambda a: f"(({a[0]}) DIV ({a[1]}))")
-    sql = _rewrite_calls(sql, "modulo", lambda a: f"(({a[0]}) % ({a[1]}))")
+    _call("intDiv", lambda a: f"(({a[0]}) DIV ({a[1]}))")
+    _call("modulo", lambda a: f"(({a[0]}) % ({a[1]}))")
     # named arithmetic (CH operator-function aliases)
-    sql = _rewrite_calls(sql, "plus", lambda a: f"(({a[0]}) + ({a[1]}))")
-    sql = _rewrite_calls(sql, "minus", lambda a: f"(({a[0]}) - ({a[1]}))")
-    sql = _rewrite_calls(sql, "multiply", lambda a: f"(({a[0]}) * ({a[1]}))")
-    sql = _rewrite_calls(sql, "divide", lambda a: f"(({a[0]}) / ({a[1]}))")
-    sql = _rewrite_calls(sql, "negate", lambda a: f"(-({a[0]}))")
-    sql = _rewrite_calls(
-        sql, "empty",
-        lambda a: f"({_len_expr(a[0], str_fn='octet_length')} = 0)",
-    )
-    sql = _rewrite_calls(
-        sql, "notEmpty",
+    _call("plus", lambda a: f"(({a[0]}) + ({a[1]}))")
+    _call("minus", lambda a: f"(({a[0]}) - ({a[1]}))")
+    _call("multiply", lambda a: f"(({a[0]}) * ({a[1]}))")
+    _call("divide", lambda a: f"(({a[0]}) / ({a[1]}))")
+    _call("negate", lambda a: f"(-({a[0]}))")
+    _call("empty", lambda a: f"({_len_expr(a[0], str_fn='octet_length')} = 0)")
+    _call(
+        "notEmpty",
         lambda a: f"({_len_expr(a[0], str_fn='octet_length')} > 0)",
     )
     # higher-order array functions: ClickHouse puts the lambda FIRST
@@ -4156,11 +4164,11 @@ def _translate_functions(sql: str) -> str:
             "higher-order array functions translate for 1 or 2 array"
             " arguments — zip ≥3 arrays explicitly with arrayZip")
 
-    sql = _rewrite_calls(
-        sql, "arrayMap",
+    _call(
+        "arrayMap",
         lambda a: _hof_two(a, f"transform({a[1]}, {a[0]})", lambda z: z))
-    sql = _rewrite_calls(
-        sql, "arrayFilter",
+    _call(
+        "arrayFilter",
         lambda a: _hof_two(
             a, f"filter({a[1]}, {a[0]})",
             lambda z: (
@@ -4168,56 +4176,56 @@ def _translate_functions(sql: str) -> str:
                 f" (__hf_x, __hf_k) -> named_struct('v', __hf_x,"
                 f" 'k', CAST(__hf_k AS BOOLEAN))), __hf_s -> __hf_s.k),"
                 f" __hf_s -> __hf_s.v)")))
-    sql = _rewrite_calls(
-        sql, "arrayExists",
+    _call(
+        "arrayExists",
         lambda a: _hof_two(
             a, f"exists({a[1]}, {a[0]})",
             lambda z: f"exists({z}, __he_x -> CAST(__he_x AS BOOLEAN))"))
-    sql = _rewrite_calls(
-        sql, "arrayAll",
+    _call(
+        "arrayAll",
         lambda a: _hof_two(
             a, f"forall({a[1]}, {a[0]})",
             lambda z: f"forall({z}, __he_x -> CAST(__he_x AS BOOLEAN))"))
-    sql = _rewrite_calls(
-        sql, "arrayCount",
+    _call(
+        "arrayCount",
         lambda a: _hof_two(
             a, f"size(filter({a[1]}, {a[0]}))",
             lambda z: (f"size(filter({z},"
                        f" __he_x -> CAST(__he_x AS BOOLEAN)))")))
-    sql = _rewrite_calls(sql, "arraySplit", _array_split(False))
-    sql = _rewrite_calls(sql, "arrayReverseSplit", _array_split(True))
+    _call("arraySplit", _array_split(False))
+    _call("arrayReverseSplit", _array_split(True))
     # -Array aggregate combinators: aggregate over every element of the
     # rows' arrays — per-row array fold composed with the row aggregate
     # (same DOUBLE widening note as arraySum)
-    sql = _rewrite_calls(sql, "sumArray", lambda a: f"sum({_array_sum([a[0]])})")
-    sql = _rewrite_calls(sql, "minArray", lambda a: f"min(array_min({a[0]}))")
-    sql = _rewrite_calls(sql, "maxArray", lambda a: f"max(array_max({a[0]}))")
-    sql = _rewrite_calls(sql, "countArray", lambda a: f"sum(size({a[0]}))")
-    sql = _rewrite_calls(
-        sql, "avgArray",
+    _call("sumArray", lambda a: f"sum({_array_sum([a[0]])})")
+    _call("minArray", lambda a: f"min(array_min({a[0]}))")
+    _call("maxArray", lambda a: f"max(array_max({a[0]}))")
+    _call("countArray", lambda a: f"sum(size({a[0]}))")
+    _call(
+        "avgArray",
         # try_divide: zero total elements → NULL (CH yields NaN; NULL is
         # the ANSI-safe reading — never a runtime error)
         lambda a: f"try_divide(sum({_array_sum([a[0]])}), sum(size({a[0]})))",
     )
-    sql = _rewrite_calls(sql, "arraySum", _array_sum)
-    sql = _rewrite_calls(sql, "arrayEnumerate", lambda a: f"sequence(1, size({a[0]}))")
-    sql = _rewrite_calls(sql, "indexOf", lambda a: f"array_position({a[0]}, {a[1]})")
-    sql = _rewrite_calls(
-        sql, "arrayStringConcat",
+    _call("arraySum", _array_sum)
+    _call("arrayEnumerate", lambda a: f"sequence(1, size({a[0]}))")
+    _call("indexOf", lambda a: f"array_position({a[0]}, {a[1]})")
+    _call(
+        "arrayStringConcat",
         lambda a: f"array_join({a[0]}, {a[1] if len(a) > 1 else chr(39) * 2})",
     )
-    sql = _rewrite_calls(sql, "hasAny", lambda a: f"arrays_overlap({a[0]}, {a[1]})")
-    sql = _rewrite_calls(
-        sql, "hasAll",
+    _call("hasAny", lambda a: f"arrays_overlap({a[0]}, {a[1]})")
+    _call(
+        "hasAll",
         lambda a: f"forall({a[1]}, __ha_x -> array_contains({a[0]}, __ha_x))",
     )
-    sql = _rewrite_calls(sql, "splitByChar", lambda a: _split_by_char(a))
-    sql = _rewrite_calls(sql, "splitByString", lambda a: _split_by_char(a))
+    _call("splitByChar", lambda a: _split_by_char(a))
+    _call("splitByString", lambda a: _split_by_char(a))
     # generic typed JSONExtract(json, [path…,] 'Type') — dispatch the
     # scalar types onto the same machinery as the JSONExtract<T> forms;
     # array/tuple/map type arguments refuse (no faithful generic
     # decomposition at SQL level)
-    sql = _rewrite_calls(sql, "JSONExtract", _json_extract_generic)
+    _call("JSONExtract", _json_extract_generic)
     for ch, cast in [
         ("JSONExtractString", None),
         ("JSONExtractRaw", None),
@@ -4244,12 +4252,9 @@ def _translate_functions(sql: str) -> str:
         ("visitParamExtractFloat", "DOUBLE"),
         ("visitParamExtractBool", "BOOLEAN"),
     ]:
-        sql = _rewrite_calls(sql, ch, lambda a, c=cast: _json_extract(a, c))
-    sql = _rewrite_calls(
-        sql, "simpleJSONHas", lambda a: f"({_json_extract(a, None)} IS NOT NULL)"
-    )
-    sql = _rewrite_calls(
-        sql,
+        _call(ch, lambda a, c=cast: _json_extract(a, c))
+    _call("simpleJSONHas", lambda a: f"({_json_extract(a, None)} IS NOT NULL)")
+    _call(
         "JSONExtractKeys",
         # CH returns [] (not NULL) for malformed / non-object input;
         # Spark's json_object_keys yields NULL there — coalesce to match
@@ -4259,29 +4264,24 @@ def _translate_functions(sql: str) -> str:
             + "), CAST(array() AS ARRAY<STRING>))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "divideDecimal", _decimal_arith_fn("divideDecimal",
+    _call(
+        "divideDecimal", _decimal_arith_fn("divideDecimal",
                                                 "ch_decimal_div"))
-    sql = _rewrite_calls(
-        sql, "multiplyDecimal", _decimal_arith_fn("multiplyDecimal",
+    _call(
+        "multiplyDecimal", _decimal_arith_fn("multiplyDecimal",
                                                   "ch_decimal_mul"))
-    sql = _rewrite_calls(sql, "toDecimalString", _to_decimal_string_fn)
-    sql = _rewrite_calls(sql, "JSONExtractKeysAndValues", _json_kv_fn)
-    sql = _rewrite_calls(sql, "JSONType", _json_type_fn)
-    sql = _rewrite_calls(sql, "JSONExtractArrayRaw", _json_array_raw_fn)
-    sql = _rewrite_calls(
-        sql,
+    _call("toDecimalString", _to_decimal_string_fn)
+    _call("JSONExtractKeysAndValues", _json_kv_fn)
+    _call("JSONType", _json_type_fn)
+    _call("JSONExtractArrayRaw", _json_array_raw_fn)
+    _call(
         "toStringCutToZero",
         lambda a: f"substring_index({a[0]}, char(0), 1)",
     )
-    sql = _rewrite_calls(
-        sql, "JSONHas", lambda a: f"({_json_extract(a, None)} IS NOT NULL)"
-    )
-    sql = _rewrite_calls(
-        sql, "visitParamHas", lambda a: f"({_json_extract(a, None)} IS NOT NULL)"
-    )
-    sql = _rewrite_calls(
-        sql, "JSONLength",
+    _call("JSONHas", lambda a: f"({_json_extract(a, None)} IS NOT NULL)")
+    _call("visitParamHas", lambda a: f"({_json_extract(a, None)} IS NOT NULL)")
+    _call(
+        "JSONLength",
         # CH: array → element count, object → key count, else 0; the
         # 1-arg form measures the whole document
         lambda a: (
@@ -4292,22 +4292,22 @@ def _translate_functions(sql: str) -> str:
             + ")), 0)"
         ),
     )
-    sql = _rewrite_calls(sql, "extract", _extract_regex)
-    sql = _rewrite_calls(sql, "isNull", lambda a: f"({a[0]} IS NULL)")
-    sql = _rewrite_calls(sql, "isNotNull", lambda a: f"({a[0]} IS NOT NULL)")
+    _call("extract", _extract_regex)
+    _call("isNull", lambda a: f"({a[0]} IS NULL)")
+    _call("isNotNull", lambda a: f"({a[0]} IS NOT NULL)")
     # fixed-width time buckets: epoch floor-division keeps the arithmetic
     # JVM-side and partition-prunable (same shape CH uses internally)
     for ch, secs in _FIXED_BUCKETS.items():
-        sql = _rewrite_calls(sql, ch, lambda a, s=secs: _bucket_expr(a[0], s))
-    sql = _rewrite_calls(sql, "toStartOfInterval", _to_start_of_interval)
+        _call(ch, lambda a, s=secs: _bucket_expr(a[0], s))
+    _call("toStartOfInterval", _to_start_of_interval)
     # time-window scalars (CH WINDOW VIEW family, callable standalone):
     # tumble → epoch-aligned [start, end) tuple, hop → FIRST covering window
-    sql = _rewrite_calls(sql, "tumbleStart", lambda a: _tumble_edge(a, 1, "tumbleStart"))
-    sql = _rewrite_calls(sql, "tumbleEnd", lambda a: _tumble_edge(a, 2, "tumbleEnd"))
-    sql = _rewrite_calls(sql, "tumble", _tumble_fn)
-    sql = _rewrite_calls(sql, "hopStart", lambda a: _hop_edge(a, 1, "hopStart"))
-    sql = _rewrite_calls(sql, "hopEnd", lambda a: _hop_edge(a, 2, "hopEnd"))
-    sql = _rewrite_calls(sql, "hop", _hop_fn)
+    _call("tumbleStart", lambda a: _tumble_edge(a, 1, "tumbleStart"))
+    _call("tumbleEnd", lambda a: _tumble_edge(a, 2, "tumbleEnd"))
+    _call("tumble", _tumble_fn)
+    _call("hopStart", lambda a: _hop_edge(a, 1, "hopStart"))
+    _call("hopEnd", lambda a: _hop_edge(a, 2, "hopEnd"))
+    _call("hop", _hop_fn)
     # URL dissection → Spark try_parse_url parts.  Spark 4's parse_url
     # THROWS [INVALID_URL] on any malformed row; ClickHouse's URL getters
     # never fail and return '' for invalid input — so every rewrite here
@@ -4317,12 +4317,12 @@ def _translate_functions(sql: str) -> str:
     # last-two-labels parity property); host extraction is CH domain()
     # semantics inside the UDF, so bare hosts work (try_parse_url needs a
     # scheme)
-    sql = _rewrite_calls(
-        sql, "firstSignificantSubdomain",
+    _call(
+        "firstSignificantSubdomain",
         lambda a: f"ch_first_significant_subdomain({a[0]})",
     )
-    sql = _rewrite_calls(
-        sql, "cutToFirstSignificantSubdomain",
+    _call(
+        "cutToFirstSignificantSubdomain",
         lambda a: f"ch_cut_to_first_significant_subdomain({a[0]})",
     )
     for ch, part in [
@@ -4332,23 +4332,23 @@ def _translate_functions(sql: str) -> str:
         ("protocol", "PROTOCOL"),
         ("fragment", "REF"),
     ]:
-        sql = _rewrite_calls(
-            sql, ch,
+        _call(
+            ch,
             lambda a, p=part: f"coalesce(try_parse_url({a[0]}, '{p}'), '')",
         )
-    sql = _rewrite_calls(
-        sql, "domainWithoutWWW",
+    _call(
+        "domainWithoutWWW",
         lambda a: (
             "regexp_replace(coalesce("
             f"try_parse_url({a[0]}, 'HOST'), ''), '^www\\\\.', '')"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "URLDomain",
+    _call(
+        "URLDomain",
         lambda a: f"coalesce(try_parse_url({a[0]}, 'HOST'), '')",
     )
-    sql = _rewrite_calls(
-        sql, "topLevelDomain",
+    _call(
+        "topLevelDomain",
         # CH yields '' for IP-literal / invalid hosts; the letters-only
         # last-label guard keeps IPs and bare names out, matching that
         lambda a: (
@@ -4358,8 +4358,8 @@ def _translate_functions(sql: str) -> str:
             "ELSE '' END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "pathFull",
+    _call(
+        "pathFull",
         # CH pathFull = path + ?query + #fragment
         lambda a: (
             f"concat(coalesce(try_parse_url({a[0]}, 'PATH'), ''), "
@@ -4367,8 +4367,8 @@ def _translate_functions(sql: str) -> str:
             f"coalesce(concat('#', try_parse_url({a[0]}, 'REF')), ''))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "cutQueryString",
+    _call(
+        "cutQueryString",
         # CH drops '?query' but KEEPS '#fragment'.  A '?' is only a query
         # delimiter when it precedes any '#' (a '?' inside the fragment is
         # data); when cutting, re-append everything from the first '#' on.
@@ -4383,21 +4383,21 @@ def _translate_functions(sql: str) -> str:
             f"ELSE {a[0]} END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "cutFragment", lambda a: f"substring_index({a[0]}, '#', 1)"
+    _call(
+        "cutFragment", lambda a: f"substring_index({a[0]}, '#', 1)"
     )
-    sql = _rewrite_calls(
-        sql, "cutQueryStringAndFragment",
+    _call(
+        "cutQueryStringAndFragment",
         lambda a: f"substring_index(substring_index({a[0]}, '#', 1), '?', 1)",
     )
-    sql = _rewrite_calls(
-        sql, "decodeURLComponent",
+    _call(
+        "decodeURLComponent",
         # url_decode is FORM decoding ('+' → space); CH percent-decodes
         # only — protect literal '+' before decoding
         lambda a: f"url_decode(replace({a[0]}, '+', '%2B'))",
     )
-    sql = _rewrite_calls(
-        sql, "encodeURLComponent",
+    _call(
+        "encodeURLComponent",
         # url_encode is form-encoding (space → '+'); CH percent-encodes —
         # the '+'→'%20' fixup covers the one divergent character class
         lambda a: f"replace(url_encode({a[0]}), '+', '%20')",
@@ -4412,20 +4412,20 @@ def _translate_functions(sql: str) -> str:
             parts = ["0"] * 7
             parts[s] = f"({a[0]})"
             return f"make_interval({', '.join(parts)})"
-        sql = _rewrite_calls(sql, ch, _mk)
-    sql = _rewrite_calls(
-        sql, "toIntervalQuarter",
+        _call(ch, _mk)
+    _call(
+        "toIntervalQuarter",
         lambda a: f"make_interval(0, ({a[0]}) * 3, 0, 0, 0, 0, 0)",
     )
     # power-of-base shortcuts; the int forms stay exact in the Int64 range
     # (doubles represent every power of 2 ≤ 2^62 and of 10 ≤ 10^18 exactly)
-    sql = _rewrite_calls(sql, "exp2", lambda a: f"power(2, {a[0]})")
-    sql = _rewrite_calls(sql, "exp10", lambda a: f"power(10, {a[0]})")
+    _call("exp2", lambda a: f"power(2, {a[0]})")
+    _call("exp10", lambda a: f"power(10, {a[0]})")
     # exponent range guards: Java shiftleft wraps the shift mod 64 and
     # power() overflow saturates — out-of-range must ERROR like CH, not
     # silently wrap (raise_error branch is lazy under CASE)
-    sql = _rewrite_calls(
-        sql, "intExp2",
+    _call(
+        "intExp2",
         lambda a: (
             f"CASE WHEN ({a[0]}) >= 0 AND ({a[0]}) <= 62 "
             f"THEN shiftleft(CAST(1 AS BIGINT), {a[0]}) "
@@ -4434,8 +4434,8 @@ def _translate_functions(sql: str) -> str:
             "AS BIGINT) END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "intExp10",
+    _call(
+        "intExp10",
         lambda a: (
             f"CASE WHEN ({a[0]}) >= 0 AND ({a[0]}) <= 18 "
             f"THEN CAST(power(10, {a[0]}) AS BIGINT) "
@@ -4445,20 +4445,20 @@ def _translate_functions(sql: str) -> str:
         ),
     )
     for be in ("parseDateTimeBestEffortOrNull", "parseDateTime64BestEffortOrNull"):
-        sql = _rewrite_calls(sql, be, lambda a: _parse_best_effort(a[0]))
+        _call(be, lambda a: _parse_best_effort(a[0]))
     for be in ("parseDateTimeBestEffortOrZero", "parseDateTime64BestEffortOrZero"):
-        sql = _rewrite_calls(
-            sql, be,
+        _call(
+            be,
             lambda a: (
                 f"coalesce({_parse_best_effort(a[0])}, "
                 "TIMESTAMP '1970-01-01 00:00:00')"
             ),
         )
     for be in ("parseDateTimeBestEffort", "parseDateTime64BestEffort"):
-        sql = _rewrite_calls(sql, be, lambda a: _parse_best_effort(a[0]))
-    sql = _rewrite_calls(sql, "format", _ch_format)
-    sql = _rewrite_calls(
-        sql, "replaceOne",
+        _call(be, lambda a: _parse_best_effort(a[0]))
+    _call("format", _ch_format)
+    _call(
+        "replaceOne",
         # first-occurrence splice; locate() is re-evaluated but cheap
         lambda a: (
             f"CASE WHEN locate({a[1]}, {a[0]}) > 0 "
@@ -4467,12 +4467,12 @@ def _translate_functions(sql: str) -> str:
             f"ELSE {a[0]} END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "toYYYYMMDDhhmmss",
+    _call(
+        "toYYYYMMDDhhmmss",
         lambda a: f"CAST(date_format({a[0]}, 'yyyyMMddHHmmss') AS BIGINT)",
     )
-    sql = _rewrite_calls(
-        sql, "wordCount",
+    _call(
+        "wordCount",
         # regexp trim, NOT trim(): Spark trim strips only ASCII spaces, so
         # a leading tab/newline would leave an empty first token
         lambda a: (
@@ -4483,18 +4483,18 @@ def _translate_functions(sql: str) -> str:
     )
     # population moments: Spark skewness/kurtosis ARE the population forms
     # (kurtosis is excess — CH kurtPop is not, hence the +3)
-    sql = _rewrite_calls(sql, "skewPop", lambda a: f"skewness({a[0]})")
-    sql = _rewrite_calls(sql, "kurtPop", lambda a: f"(kurtosis({a[0]}) + 3)")
-    sql = _rewrite_calls(sql, "toWeek", _to_week)
-    sql = _rewrite_calls(sql, "gcd", _gcd)
-    sql = _rewrite_calls(sql, "lcm", _lcm)
-    sql = _rewrite_calls(sql, "roundToExp2", _round_to_exp2)
-    sql = _rewrite_calls(sql, "roundDown", _round_down)
-    sql = _rewrite_calls(sql, "stringJaccardIndexUTF8", _string_jaccard)
-    sql = _rewrite_calls(sql, "stringJaccardIndex", _string_jaccard)
-    sql = _rewrite_calls(sql, "entropy", _entropy)
-    sql = _rewrite_calls(sql, "mapPopulateSeries", _map_populate_series)
-    sql = _rewrite_calls(sql, "replaceRegexpOne", _replace_regexp_one)
+    _call("skewPop", lambda a: f"skewness({a[0]})")
+    _call("kurtPop", lambda a: f"(kurtosis({a[0]}) + 3)")
+    _call("toWeek", _to_week)
+    _call("gcd", _gcd)
+    _call("lcm", _lcm)
+    _call("roundToExp2", _round_to_exp2)
+    _call("roundDown", _round_down)
+    _call("stringJaccardIndexUTF8", _string_jaccard)
+    _call("stringJaccardIndex", _string_jaccard)
+    _call("entropy", _entropy)
+    _call("mapPopulateSeries", _map_populate_series)
+    _call("replaceRegexpOne", _replace_regexp_one)
     for suffix, ty in [
         ("UInt8", "BIGINT"), ("UInt16", "BIGINT"), ("UInt32", "BIGINT"),
         ("UInt64", "DECIMAL(20,0)"), ("Int8", "BIGINT"), ("Int16", "BIGINT"),
@@ -4502,8 +4502,8 @@ def _translate_functions(sql: str) -> str:
         ("Float64", "DOUBLE"), ("String", "STRING"), ("Date", "DATE"),
         ("DateTime", "TIMESTAMP"),
     ]:
-        sql = _rewrite_calls(
-            sql, f"emptyArray{suffix}",
+        _call(
+            f"emptyArray{suffix}",
             lambda a, t=ty: f"CAST(array() AS ARRAY<{t}>)",
         )
     # emptyArrayToSingle (r10, previously refused): pads an empty array
@@ -4513,18 +4513,17 @@ def _translate_functions(sql: str) -> str:
     # means we see that form) or a non-empty array literal (identity).
     # Arbitrary expressions still refuse: the element default is
     # invisible at SQL-text level.
-    sql = _rewrite_calls(
-        sql, "emptyArrayToSingle", _empty_array_to_single)
-    sql = _rewrite_calls(
-        sql, "formatReadableSize",
+    _call("emptyArrayToSingle", _empty_array_to_single)
+    _call(
+        "formatReadableSize",
         lambda a: _format_readable(
             a[0], 1024.0,
             [" B", " KiB", " MiB", " GiB", " TiB", " PiB", " EiB", " ZiB",
              " YiB"],
         ),
     )
-    sql = _rewrite_calls(
-        sql, "formatReadableQuantity",
+    _call(
+        "formatReadableQuantity",
         lambda a: _format_readable(
             a[0], 1000.0,
             ["", " thousand", " million", " billion", " trillion",
@@ -4544,30 +4543,27 @@ def _translate_functions(sql: str) -> str:
     for _tan, _top in (("tuplePlus", "+"), ("tupleMinus", "-"),
                        ("tupleMultiply", "*"), ("tupleDivide", "/"),
                        ("tupleIntDiv", "DIV"), ("tupleModulo", "%")):
-        sql = _rewrite_calls(sql, _tan, _tuple_binop_fn(_tan, _top))
-    sql = _rewrite_calls(
-        sql, "tupleNegate",
+        _call(_tan, _tuple_binop_fn(_tan, _top))
+    _call(
+        "tupleNegate",
         lambda a: _tuple_map1("tupleNegate", a, lambda x: f"(-({x}))"))
-    sql = _rewrite_calls(
-        sql, "tupleMultiplyByNumber",
+    _call(
+        "tupleMultiplyByNumber",
         lambda a: _tuple_by_number("tupleMultiplyByNumber", a, "*"))
-    sql = _rewrite_calls(
-        sql, "tupleDivideByNumber",
+    _call(
+        "tupleDivideByNumber",
         lambda a: _tuple_by_number("tupleDivideByNumber", a, "/"))
-    sql = _rewrite_calls(
-        sql, "tupleHammingDistance", _tuple_hamming)
-    sql = _rewrite_calls(
-        sql, "tupleConcat",
-        lambda a: _tuple_concat(a))
+    _call("tupleHammingDistance", _tuple_hamming)
+    _call("tupleConcat", lambda a: _tuple_concat(a))
     # tuple → named_struct with CH-style 1-based element names, so both
     # tupleElement(t, N) and tupleElement(t, 'name') become field access
-    sql = _rewrite_calls(
-        sql, "tuple",
+    _call(
+        "tuple",
         lambda a: "named_struct("
         + ", ".join(f"'_{i + 1}', {x}" for i, x in enumerate(a))
         + ")",
     )
-    sql = _rewrite_calls(sql, "tupleElement", _tuple_element)
+    _call("tupleElement", _tuple_element)
 
     def _untuple(a: list[str]) -> str:
         # untuple(t) expands a tuple column into its fields — Spark's
@@ -4582,20 +4578,18 @@ def _translate_functions(sql: str) -> str:
             "(becomes col.*) — alias the expression in a subquery first"
         )
 
-    sql = _rewrite_calls(sql, "untuple", _untuple)
+    _call("untuple", _untuple)
     # --- batch 3: string/array/map/stat/ip/uuid/time tail ---
-    sql = _rewrite_calls(
-        sql, "mid", lambda a: f"substring({', '.join(a)})"
-    )
-    sql = _rewrite_calls(
-        sql, "arrayProduct",
+    _call("mid", lambda a: f"substring({', '.join(a)})")
+    _call(
+        "arrayProduct",
         lambda a: (
             f"aggregate({a[0]}, CAST(1 AS DOUBLE), "
             "(__ap_a, __ap_x) -> __ap_a * CAST(__ap_x AS DOUBLE))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "arrayReverseSort",
+    _call(
+        "arrayReverseSort",
         lambda a: (
             f"reverse(array_sort({a[0]}))"
             if len(a) == 1
@@ -4604,8 +4598,8 @@ def _translate_functions(sql: str) -> str:
                          "transformed key column)")
         ),
     )
-    sql = _rewrite_calls(
-        sql, "arrayFold",
+    _call(
+        "arrayFold",
         # CH arrayFold(λ(acc, x), arr, init) → aggregate(arr, init, λ)
         lambda a: (
             f"aggregate({a[1]}, {a[2]}, {a[0]})"
@@ -4614,17 +4608,15 @@ def _translate_functions(sql: str) -> str:
                          "arrays_zip first)")
         ),
     )
-    sql = _rewrite_calls(
-        sql, "mapFilter", lambda a: f"map_filter({a[1]}, {a[0]})"
-    )
+    _call("mapFilter", lambda a: f"map_filter({a[1]}, {a[0]})")
     for mfn, combine in (
         ("mapAdd", "coalesce(__m1, 0) + coalesce(__m2, 0)"),
         ("mapSubtract", "coalesce(__m1, 0) - coalesce(__m2, 0)"),
         ("mapUpdate", "coalesce(__m2, __m1)"),
         ("mapConcat", "coalesce(__m1, __m2)"),  # CH: FIRST map's key wins
     ):
-        sql = _rewrite_calls(
-            sql, mfn,
+        _call(
+            mfn,
             lambda a, c=combine, n=mfn: (
                 f"map_zip_with({a[0]}, {a[1]}, (__mk, __m1, __m2) -> {c})"
                 if len(a) == 2
@@ -4632,43 +4624,41 @@ def _translate_functions(sql: str) -> str:
                              "two-map form)")
             ),
         )
-    sql = _rewrite_calls(
-        sql, "simpleLinearRegression",
+    _call(
+        "simpleLinearRegression",
         # CH (x, y) → (k, b) for y = kx + b; Spark regr_* take (y, x)
         lambda a: (
             f"named_struct('_1', regr_slope({a[1]}, {a[0]}), "
             f"'_2', regr_intercept({a[1]}, {a[0]}))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "boundingRatio",
+    _call(
+        "boundingRatio",
         # slope between the leftmost and rightmost points of the group
         lambda a: (
             f"try_divide(max_by({a[1]}, {a[0]}) - min_by({a[1]}, {a[0]}), "
             f"max({a[0]}) - min({a[0]}))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "bitHammingDistance", lambda a: f"bit_count(({a[0]}) ^ ({a[1]}))"
-    )
-    sql = _rewrite_calls(
-        sql, "isIPv4String",
+    _call("bitHammingDistance", lambda a: f"bit_count(({a[0]}) ^ ({a[1]}))")
+    _call(
+        "isIPv4String",
         lambda a: f"CAST({a[0]} RLIKE '{_IPV4_RE_SQL}' AS INT)",
     )
-    sql = _rewrite_calls(
-        sql, "isIPv6String",
+    _call(
+        "isIPv6String",
         lambda a: f"CAST({a[0]} RLIKE '{_IPV6_RE_SQL}' AS INT)",
     )
-    sql = _rewrite_calls(
-        sql, "UUIDStringToNum",
+    _call(
+        "UUIDStringToNum",
         lambda a: (
             f"unhex(replace({a[0]}, '-', ''))"
             if len(a) == 1
             else _refuse("UUIDStringToNum variant argument")
         ),
     )
-    sql = _rewrite_calls(
-        sql, "UUIDNumToString",
+    _call(
+        "UUIDNumToString",
         lambda a: (
             f"lower(concat(substring(hex({a[0]}), 1, 8), '-', "
             f"substring(hex({a[0]}), 9, 4), '-', "
@@ -4681,14 +4671,13 @@ def _translate_functions(sql: str) -> str:
     )
     # change<Part>(d, v) family — make_timestamp recomposition
     for _cp in ("year", "month", "day", "hour", "minute", "second"):
-        sql = _rewrite_calls(sql, f"change{_cp.title()}",
-                             _change_date_fn(_cp))
+        _call(f"change{_cp.title()}", _change_date_fn(_cp))
     # NEW-style snowflake ID functions (the successors of the Twitter-
     # epoch family below): epoch defaults to 0 = unix; the UInt64 id
     # rides DECIMAL(20,0), so >>22 is an exact div by 2^22
     for _sn in ("snowflakeIDToDateTime", "snowflakeIDToDateTime64"):
-        sql = _rewrite_calls(
-            sql, _sn,
+        _call(
+            _sn,
             lambda a, n=_sn: (
                 f"timestamp_millis(CAST(CAST({a[0]} AS DECIMAL(20, 0)) "
                 f"div 4194304 AS BIGINT)"
@@ -4700,8 +4689,8 @@ def _translate_functions(sql: str) -> str:
             ),
         )
     for _sn in ("dateTimeToSnowflakeID", "dateTime64ToSnowflakeID"):
-        sql = _rewrite_calls(
-            sql, _sn,
+        _call(
+            _sn,
             lambda a, n=_sn: (
                 f"CAST(CAST(unix_millis(CAST({a[0]} AS TIMESTAMP))"
                 + (f" - CAST({a[1]} AS BIGINT)" if len(a) == 2 else "")
@@ -4709,27 +4698,27 @@ def _translate_functions(sql: str) -> str:
             ) if len(a) in (1, 2) else _refuse(f"{n} takes (dt[, epoch])"),
         )
     # division that NULLs on a zero divisor (CH divideOrNull)
-    sql = _rewrite_calls(
-        sql, "divideOrNull",
+    _call(
+        "divideOrNull",
         lambda a: (f"IF(({a[1]}) = 0, CAST(NULL AS DOUBLE), "
                    f"CAST({a[0]} AS DOUBLE) / ({a[1]}))"),
     )
     # Spark strings are always valid UTF-8 (invalid bytes become U+FFFD
     # at ingestion) — isValidUTF8 is the NULL-preserving constant 1
-    sql = _rewrite_calls(
-        sql, "isValidUTF8",
+    _call(
+        "isValidUTF8",
         lambda a: f"IF(({a[0]}) IS NULL, CAST(NULL AS INT), 1)",
     )
-    sql = _rewrite_calls(
-        sql, "positionCaseInsensitiveUTF8",
+    _call(
+        "positionCaseInsensitiveUTF8",
         lambda a: f"locate(lower({a[1]}), lower({a[0]}))",
     )
     # CH's instr is an ALIAS OF positionCaseInsensitive (the MySQL
     # collation convention) — Spark's builtin instr is case-SENSITIVE,
     # so the bare passthrough silently diverged; emitted via locate to
     # keep the rewrite fixed-point
-    sql = _rewrite_calls(
-        sql, "instr",
+    _call(
+        "instr",
         lambda a: f"locate(lower({a[1]}), lower({a[0]}))"
         if len(a) == 2 else _refuse("instr takes (haystack, needle)"),
     )
@@ -4740,49 +4729,40 @@ def _translate_functions(sql: str) -> str:
                      ("firstValueRespectNulls", "first_value"),
                      ("anyLastRespectNulls", "last"),
                      ("lastValueRespectNulls", "last_value")):
-        sql = _rewrite_calls(sql, _rn, lambda a, f=_rf: f"{f}({a[0]})")
+        _call(_rn, lambda a, f=_rf: f"{f}({a[0]})")
     # -Array combinator alias spellings over groupArray bases
-    sql = _rewrite_calls(
-        sql, "groupArrayArray",
-        lambda a: f"flatten(collect_list({a[0]}))")
-    sql = _rewrite_calls(
-        sql, "groupUniqArrayArray",
+    _call("groupArrayArray", lambda a: f"flatten(collect_list({a[0]}))")
+    _call(
+        "groupUniqArrayArray",
         lambda a: f"array_distinct(flatten(collect_list({a[0]})))")
-    sql = _rewrite_calls(sql, "UTCTimestamp",
-                         lambda a: "current_timestamp()")
+    _call("UTCTimestamp", lambda a: "current_timestamp()")
     # wall-time <-> UTC converters: Spark's builtins have the exact CH
     # signature and semantics
-    sql = _rewrite_calls(
-        sql, "toUTCTimestamp",
-        lambda a: f"to_utc_timestamp({a[0]}, {a[1]})")
-    sql = _rewrite_calls(
-        sql, "fromUTCTimestamp",
-        lambda a: f"from_utc_timestamp({a[0]}, {a[1]})")
+    _call("toUTCTimestamp", lambda a: f"to_utc_timestamp({a[0]}, {a[1]})")
+    _call("fromUTCTimestamp", lambda a: f"from_utc_timestamp({a[0]}, {a[1]})")
     # sub-second date arithmetic via exact micros (ns stays refused)
     for _mn, _mul, _sgn in (("addMilliseconds", 1000, "+"),
                             ("subtractMilliseconds", 1000, "-"),
                             ("addMicroseconds", 1, "+"),
                             ("subtractMicroseconds", 1, "-")):
-        sql = _rewrite_calls(
-            sql, _mn,
+        _call(
+            _mn,
             lambda a, m=_mul, s=_sgn: (
                 f"timestamp_micros(unix_micros(CAST({a[0]} AS TIMESTAMP))"
                 f" {s} CAST({a[1]} AS BIGINT) * {m})"
             ),
         )
-    sql = _rewrite_calls(
-        sql, "addInterval", lambda a: f"(({a[0]}) + ({a[1]}))")
-    sql = _rewrite_calls(
-        sql, "subtractInterval", lambda a: f"(({a[0]}) - ({a[1]}))")
-    sql = _rewrite_calls(
-        sql, "toModifiedJulianDayOrNull",
+    _call("addInterval", lambda a: f"(({a[0]}) + ({a[1]}))")
+    _call("subtractInterval", lambda a: f"(({a[0]}) - ({a[1]}))")
+    _call(
+        "toModifiedJulianDayOrNull",
         lambda a: (
             f"IF(try_cast({a[0]} AS DATE) IS NULL, CAST(NULL AS INT), "
             f"datediff(try_cast({a[0]} AS DATE), DATE '1858-11-17'))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "fromModifiedJulianDayOrNull",
+    _call(
+        "fromModifiedJulianDayOrNull",
         lambda a: f"try_cast(date_add(DATE '1858-11-17', "
                   f"CAST({a[0]} AS INT)) AS DATE)",
     )
@@ -4793,8 +4773,8 @@ def _translate_functions(sql: str) -> str:
                      ("hasSubsequenceUTF8", False),
                      ("hasSubsequenceCaseInsensitive", True),
                      ("hasSubsequenceCaseInsensitiveUTF8", True)):
-        sql = _rewrite_calls(
-            sql, _hs,
+        _call(
+            _hs,
             lambda a, lw=_lw: (
                 (lambda h, n:
                     f"(aggregate(split({h}, ''), 0, (__sq, __sc) -> "
@@ -4810,41 +4790,36 @@ def _translate_functions(sql: str) -> str:
     for _cn, _co in (("equals", "="), ("notEquals", "!="),
                      ("less", "<"), ("greater", ">"),
                      ("lessOrEquals", "<="), ("greaterOrEquals", ">=")):
-        sql = _rewrite_calls(
-            sql, _cn,
+        _call(
+            _cn,
             lambda a, o=_co, n=_cn: f"(({a[0]}) {o} ({a[1]}))"
             if len(a) == 2 else _refuse(f"{n} takes exactly 2 arguments"),
         )
-    sql = _rewrite_calls(
-        sql, "avgDistinct", lambda a: f"avg(DISTINCT {a[0]})")
-    sql = _rewrite_calls(
-        sql, "minDistinct", lambda a: f"min({a[0]})")
-    sql = _rewrite_calls(
-        sql, "maxDistinct", lambda a: f"max({a[0]})")
+    _call("avgDistinct", lambda a: f"avg(DISTINCT {a[0]})")
+    _call("minDistinct", lambda a: f"min({a[0]})")
+    _call("maxDistinct", lambda a: f"max({a[0]})")
     # OrNull array accessors: the base emissions already NULL on a miss
     # (try_element_at), so these are spelled aliases
-    sql = _rewrite_calls(
-        sql, "arrayElementOrNull",
-        lambda a: f"try_element_at({a[0]}, {a[1]})")
-    sql = _rewrite_calls(
-        sql, "arrayFirstOrNull",
+    _call("arrayElementOrNull", lambda a: f"try_element_at({a[0]}, {a[1]})")
+    _call(
+        "arrayFirstOrNull",
         lambda a: f"try_element_at(filter({a[1]}, {a[0]}), 1)"
         if len(a) == 2 else _refuse("arrayFirstOrNull takes (λ, array)"),
     )
-    sql = _rewrite_calls(
-        sql, "arrayLastOrNull",
+    _call(
+        "arrayLastOrNull",
         lambda a: f"try_element_at(filter({a[1]}, {a[0]}), -1)"
         if len(a) == 2 else _refuse("arrayLastOrNull takes (λ, array)"),
     )
     # partial-sort: same deliberate full-sort instance as arrayPartialSort
-    sql = _rewrite_calls(
-        sql, "arrayPartialReverseSort",
+    _call(
+        "arrayPartialReverseSort",
         lambda a: f"reverse(array_sort({a[1]}))"
         if len(a) == 2 else _refuse(
             "arrayPartialReverseSort takes (limit, array)"),
     )
-    sql = _rewrite_calls(
-        sql, "toUUIDOrDefault",
+    _call(
+        "toUUIDOrDefault",
         lambda a: (
             f"CASE WHEN {a[0]} IS NULL THEN CAST(NULL AS STRING) "
             f"WHEN {a[0]} RLIKE '{_UUID_RE_SQL}' THEN lower({a[0]}) "
@@ -4852,29 +4827,29 @@ def _translate_functions(sql: str) -> str:
         ) if len(a) == 2 else _refuse("toUUIDOrDefault takes (s, default)"),
     )
     # bitmap subset operations over the distinct-array representation
-    sql = _rewrite_calls(
-        sql, "bitmapSubsetInRange",
+    _call(
+        "bitmapSubsetInRange",
         lambda a: (f"filter(array_distinct({a[0]}), __bs -> "
                    f"__bs >= ({a[1]}) AND __bs < ({a[2]}))")
         if len(a) == 3 else _refuse(
             "bitmapSubsetInRange takes (bitmap, start, end)"),
     )
-    sql = _rewrite_calls(
-        sql, "bitmapSubsetLimit",
+    _call(
+        "bitmapSubsetLimit",
         lambda a: (f"slice(array_sort(filter(array_distinct({a[0]}), "
                    f"__bs -> __bs >= ({a[1]}))), 1, CAST({a[2]} AS INT))")
         if len(a) == 3 else _refuse(
             "bitmapSubsetLimit takes (bitmap, start, limit)"),
     )
-    sql = _rewrite_calls(
-        sql, "subBitmap",
+    _call(
+        "subBitmap",
         lambda a: (f"slice(array_sort(array_distinct({a[0]})), "
                    f"CAST({a[1]} AS INT) + 1, CAST({a[2]} AS INT))")
         if len(a) == 3 else _refuse(
             "subBitmap takes (bitmap, offset, limit)"),
     )
-    sql = _rewrite_calls(
-        sql, "bitmapTransform",
+    _call(
+        "bitmapTransform",
         lambda a: (
             f"transform({a[0]}, __bt -> IF(array_position({a[1]}, __bt) "
             f"> 0, element_at({a[2]}, CAST(array_position({a[1]}, __bt) "
@@ -4882,34 +4857,28 @@ def _translate_functions(sql: str) -> str:
         ) if len(a) == 3 else _refuse(
             "bitmapTransform takes (bitmap, from_array, to_array)"),
     )
-    sql = _rewrite_calls(
-        sql, "countSubstringsCaseInsensitiveUTF8",
+    _call(
+        "countSubstringsCaseInsensitiveUTF8",
         lambda a: f"countSubstringsCaseInsensitive({', '.join(a)})")
-    sql = _rewrite_calls(
-        sql, "multiSearchAllPositionsUTF8",
+    _call(
+        "multiSearchAllPositionsUTF8",
         lambda a: f"multiSearchAllPositions({', '.join(a)})")
-    sql = _rewrite_calls(
-        sql, "sigmoid",
-        lambda a: f"(1.0 / (1.0 + exp(-CAST({a[0]} AS DOUBLE))))",
-    )
-    sql = _rewrite_calls(
-        sql, "toDate32OrNull",
-        lambda a: f"try_cast({a[0]} AS DATE)",
-    )
-    sql = _rewrite_calls(
-        sql, "toDate32OrZero",
+    _call("sigmoid", lambda a: f"(1.0 / (1.0 + exp(-CAST({a[0]} AS DOUBLE))))")
+    _call("toDate32OrNull", lambda a: f"try_cast({a[0]} AS DATE)")
+    _call(
+        "toDate32OrZero",
         # Date32's zero point is its range minimum, 1900-01-01
         lambda a: f"coalesce(try_cast({a[0]} AS DATE), DATE '1900-01-01')",
     )
     # N-ary array set ops: union dedupes; symmetric difference = the
     # elements NOT present in all arrays (union minus intersection)
-    sql = _rewrite_calls(
-        sql, "arrayUnion",
+    _call(
+        "arrayUnion",
         lambda a: _fold_binary("array_union", a) if len(a) >= 2
         else _refuse("arrayUnion needs at least 2 arrays"),
     )
-    sql = _rewrite_calls(
-        sql, "arraySymmetricDifference",
+    _call(
+        "arraySymmetricDifference",
         lambda a: (
             f"array_except({_fold_binary('array_union', a)}, "
             f"{_fold_binary('array_intersect', a)})"
@@ -4917,8 +4886,8 @@ def _translate_functions(sql: str) -> str:
         else _refuse("arraySymmetricDifference needs at least 2 arrays"),
     )
     # Twitter snowflake epoch = 1288834974657 ms; id >> 22 is the ms offset
-    sql = _rewrite_calls(
-        sql, "snowflakeToDateTime",
+    _call(
+        "snowflakeToDateTime",
         lambda a: (
             f"timestamp_millis(shiftright(CAST({a[0]} AS BIGINT), 22) "
             "+ 1288834974657)"
@@ -4929,25 +4898,22 @@ def _translate_functions(sql: str) -> str:
             )
         ),
     )
-    sql = _rewrite_calls(
-        sql, "dateTimeToSnowflake",
+    _call(
+        "dateTimeToSnowflake",
         lambda a: f"shiftleft(unix_millis({a[0]}) - 1288834974657, 22)",
     )
     # CH randCanonical() is the [0, 1) double; emitted as random() (the
     # Spark alias) so the rand() UInt32 rewrite below can never re-match
     # it on argument re-traversal
-    sql = _rewrite_calls(sql, "randCanonical", lambda a: "random()")
+    _call("randCanonical", lambda a: "random()")
     # CH rand() returns a UInt32 (users mod it: rand() % N); Spark's
     # rand() is a double in [0, 1) — scale up or the modulo silently
     # degenerates.  A CH dummy-seed argument is ignored, as in CH.
     # rand64 would need 64 random bits (a double holds 53): typed
     # refusal instead of a silently-biased scale-up.
-    sql = _rewrite_calls(
-        sql, "rand",
-        lambda a: "CAST(floor(random() * 4294967296) AS BIGINT)",
-    )
-    sql = _rewrite_calls(
-        sql, "rand64",
+    _call("rand", lambda a: "CAST(floor(random() * 4294967296) AS BIGINT)")
+    _call(
+        "rand64",
         lambda a: _refuse(
             "rand64() (a double has 53 random bits, not 64) — use rand()"
             " (UInt32) or randCanonical() ([0,1) double)"
@@ -4958,8 +4924,8 @@ def _translate_functions(sql: str) -> str:
     # emitted via array_max/array_min, NOT greatest/least: a replacement
     # containing the scanned name mid-string would re-match forever
     for gl, arr_fn in (("greatest", "array_max"), ("least", "array_min")):
-        sql = _rewrite_calls(
-            sql, gl,
+        _call(
+            gl,
             lambda a, f=arr_fn, g=gl: (
                 "IF(" + " OR ".join(f"({x}) IS NULL" for x in a)
                 + f", NULL, {f}(array({', '.join(a)})))"
@@ -4967,30 +4933,25 @@ def _translate_functions(sql: str) -> str:
                 else _refuse(f"{g} needs at least 2 arguments")
             ),
         )
-    sql = _rewrite_calls(
-        sql, "randNormal", lambda a: f"(({a[0]}) + ({a[1]}) * randn())"
-    )
-    sql = _rewrite_calls(
-        sql, "randBernoulli",
-        lambda a: f"CAST(random() < ({a[0]}) AS BIGINT)",
-    )
+    _call("randNormal", lambda a: f"(({a[0]}) + ({a[1]}) * randn())")
+    _call("randBernoulli", lambda a: f"CAST(random() < ({a[0]}) AS BIGINT)")
     # toTime: keep time-of-day, pin the date to 1970-01-02 (CH contract);
     # pmod keeps pre-1970 timestamps on the positive side
-    sql = _rewrite_calls(
-        sql, "toTime",
+    _call(
+        "toTime",
         lambda a: (
             f"timestamp_micros(86400000000 + "
             f"pmod(unix_micros({a[0]}), 86400000000))"
         ),
     )
     for tzf in ("timezone", "serverTimezone", "timeZoneOf", "timezoneOf"):
-        sql = _rewrite_calls(sql, tzf, lambda a: "current_timezone()")
-    sql = _rewrite_calls(sql, "nowInBlock", lambda a: "current_timestamp()")
-    sql = _rewrite_calls(sql, "identity", lambda a: f"({a[0]})")
-    sql = _rewrite_calls(sql, "materialize", lambda a: f"({a[0]})")
-    sql = _rewrite_calls(sql, "ignore", lambda a: "0")
-    sql = _rewrite_calls(
-        sql, "throwIf",
+        _call(tzf, lambda a: "current_timezone()")
+    _call("nowInBlock", lambda a: "current_timestamp()")
+    _call("identity", lambda a: f"({a[0]})")
+    _call("materialize", lambda a: f"({a[0]})")
+    _call("ignore", lambda a: "0")
+    _call(
+        "throwIf",
         # IF evaluates lazily under ANSI, so the error only fires when the
         # condition holds; CH returns 0 otherwise
         # CAST AS BOOLEAN accepts CH's numeric conditions too (nonzero →
@@ -5002,115 +4963,110 @@ def _translate_functions(sql: str) -> str:
             + ") AS INT), 0)"
         ),
     )
-    sql = _rewrite_calls(sql, "sumKahan", lambda a: f"sum({a[0]})")
-    sql = _rewrite_calls(sql, "timeSlots", _time_slots)
+    _call("sumKahan", lambda a: f"sum({a[0]})")
+    _call("timeSlots", _time_slots)
     # groupConcat: simple groupConcat(x) and the parameterized
     # groupConcat('sep'[, limit])(x) combinator form.  Concatenation order
     # is engine-dependent in BOTH engines (CH reads blocks in arrival
     # order; collect_list is partition-order-dependent) — results are only
     # stable under a deterministic upstream ORDER BY.
-    while True:
-        at = _find_call(sql, "groupConcat")
-        if at < 0:
-            break
-        open1 = sql.index("(", at)
-        end1 = _balanced(sql, open1)
-        rest = sql[end1:].lstrip()
-        g1 = [
-            _translate_functions(x).strip()
-            for x in _split_args(sql[open1 + 1 : end1 - 1])
-        ]
-        if rest.startswith("("):  # parameterized (sep[, limit])(x)
-            if len(g1) > 1:
-                raise ChTranslationError(
-                    "groupConcat(sep, limit)(x): the element limit has no "
-                    "Spark aggregate form — slice after collect_list instead"
+    def _group_concat_pass(sql: str) -> str:
+        while True:
+            at = _find_call(sql, "groupConcat")
+            if at < 0:
+                break
+            open1 = sql.index("(", at)
+            end1 = _balanced(sql, open1)
+            rest = sql[end1:].lstrip()
+            g1 = [
+                _translate_functions(x).strip()
+                for x in _split_args(sql[open1 + 1 : end1 - 1])
+            ]
+            if rest.startswith("("):  # parameterized (sep[, limit])(x)
+                if len(g1) > 1:
+                    raise ChTranslationError(
+                        "groupConcat(sep, limit)(x): the element limit has no "
+                        "Spark aggregate form — slice after collect_list instead"
+                    )
+                open2 = end1 + (len(sql[end1:]) - len(rest))
+                end2 = _balanced(sql, open2)
+                x = _translate_functions(sql[open2 + 1 : end2 - 1]).strip()
+                sep = g1[0] if g1 else "''"
+                sql = (
+                    sql[:at] + f"array_join(collect_list({x}), {sep})" + sql[end2:]
                 )
-            open2 = end1 + (len(sql[end1:]) - len(rest))
-            end2 = _balanced(sql, open2)
-            x = _translate_functions(sql[open2 + 1 : end2 - 1]).strip()
-            sep = g1[0] if g1 else "''"
-            sql = (
-                sql[:at] + f"array_join(collect_list({x}), {sep})" + sql[end2:]
-            )
-        else:
-            if len(g1) != 1:
-                raise ChTranslationError(
-                    "groupConcat takes one expression (delimiter goes in "
-                    "the parameter group: groupConcat('sep')(x))"
+            else:
+                if len(g1) != 1:
+                    raise ChTranslationError(
+                        "groupConcat takes one expression (delimiter goes in "
+                        "the parameter group: groupConcat('sep')(x))"
+                    )
+                sql = (
+                    sql[:at]
+                    + f"array_join(collect_list({g1[0]}), '')"
+                    + sql[end1:]
                 )
-            sql = (
-                sql[:at]
-                + f"array_join(collect_list({g1[0]}), '')"
-                + sql[end1:]
-            )
+        return sql
+
+    _on("groupConcat", _group_concat_pass)
     # maps
-    sql = _rewrite_calls(sql, "mapKeys", lambda a: f"map_keys({a[0]})")
-    sql = _rewrite_calls(sql, "mapValues", lambda a: f"map_values({a[0]})")
-    sql = _rewrite_calls(
-        sql, "mapContains", lambda a: f"map_contains_key({a[0]}, {a[1]})"
-    )
+    _call("mapKeys", lambda a: f"map_keys({a[0]})")
+    _call("mapValues", lambda a: f"map_values({a[0]})")
+    _call("mapContains", lambda a: f"map_contains_key({a[0]}, {a[1]})")
     # calendar names and relative-epoch unit counters
-    sql = _rewrite_calls(sql, "monthName", lambda a: f"date_format({a[0]}, 'MMMM')")
-    sql = _rewrite_calls(sql, "dateName", _date_name)
-    sql = _rewrite_calls(sql, "toStartOfWeek", _to_start_of_week)
+    _call("monthName", lambda a: f"date_format({a[0]}, 'MMMM')")
+    _call("dateName", _date_name)
+    _call("toStartOfWeek", _to_start_of_week)
     for ch, secs in [
         ("toRelativeSecondNum", 1),
         ("toRelativeMinuteNum", 60),
         ("toRelativeHourNum", 3600),
         ("toRelativeDayNum", 86400),
     ]:
-        sql = _rewrite_calls(
-            sql, ch,
+        _call(
+            ch,
             lambda a, s=secs: f"CAST(floor(unix_timestamp({a[0]}) / {s}) AS BIGINT)",
         )
-    sql = _rewrite_calls(sql, "greatCircleDistance", _great_circle)
+    _call("greatCircleDistance", _great_circle)
     # geoDistance: CH corrects for the ellipsoid (~0.3% vs the sphere);
     # mapped to the same haversine — documented delta, not a wrong shape
-    sql = _rewrite_calls(sql, "geoDistance", _great_circle)
-    sql = _rewrite_calls(sql, "transform", _transform_value_map)
+    _call("geoDistance", _great_circle)
+    _call("transform", _transform_value_map)
     # text tokenization / search
-    sql = _rewrite_calls(
-        sql,
+    _call(
         "alphaTokens",
         lambda a: f"filter(split({a[0]}, '[^A-Za-z]+'), __x -> __x != '')",
     )
-    sql = _rewrite_calls(
-        sql,
+    _call(
         "multiSearchAny",
         lambda a: f"exists({a[1]}, __p -> contains({a[0]}, __p))",
     )
-    sql = _rewrite_calls(sql, "extractGroups", _extract_groups)
-    sql = _rewrite_calls(
-        sql,
+    _call("extractGroups", _extract_groups)
+    _call(
         "isValidJSON",
         lambda a: f"(get_json_object({a[0]}, '$') IS NOT NULL)",
     )
     # time arithmetic
-    sql = _rewrite_calls(sql, "age", _age)
-    sql = _rewrite_calls(
-        sql,
+    _call("age", _age)
+    _call(
         "timeDiff",
         lambda a: f"(unix_timestamp({a[1]}) - unix_timestamp({a[0]}))",
     )
-    sql = _rewrite_calls(
-        sql,
+    _call(
         "toModifiedJulianDay",
         lambda a: f"datediff(CAST({a[0]} AS DATE), DATE '1858-11-17')",
     )
     # array utilities
-    sql = _rewrite_calls(sql, "arrayEnumerateDense", _array_enumerate_dense)
-    sql = _rewrite_calls(sql, "arrayRotateLeft", _array_rotate_left)
+    _call("arrayEnumerateDense", _array_enumerate_dense)
+    _call("arrayRotateLeft", _array_rotate_left)
     # IP / UUID conversions (CH's dedicated types come back as their
     # canonical STRING forms — the reference itself maps them from string
     # metrics, model/value.go:232-234 / parser/fastjson.go:739-785)
-    sql = _rewrite_calls(
-        sql,
+    _call(
         "toIPv4OrNull",
         lambda a: f"CASE WHEN {a[0]} RLIKE '{_IPV4_RE_SQL}' THEN {a[0]} END",
     )
-    sql = _rewrite_calls(
-        sql,
+    _call(
         "toUUIDOrNull",
         lambda a: (
             f"CASE WHEN {a[0]} RLIKE "
@@ -5119,75 +5075,68 @@ def _translate_functions(sql: str) -> str:
             + f"THEN lower({a[0]}) END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "IPv4NumToString", lambda a: _ipv4_num_to_string(a[0])
-    )
-    sql = _rewrite_calls(sql, "IPv4StringToNum", _ipv4_string_to_num)
-    sql = _rewrite_calls(sql, "IPv4CIDRToRange", _ipv4_cidr_to_range)
-    sql = _rewrite_calls(sql, "MACNumToString", _mac_num_to_string)
-    sql = _rewrite_calls(sql, "MACStringToNum", _mac_string_to_num)
-    sql = _rewrite_calls(sql, "bitmaskToList", _bitmask_to_list)
-    sql = _rewrite_calls(sql, "mapApply", _map_apply)
-    sql = _rewrite_calls(
-        sql, "maxIntersectionsPosition",
+    _call("IPv4NumToString", lambda a: _ipv4_num_to_string(a[0]))
+    _call("IPv4StringToNum", _ipv4_string_to_num)
+    _call("IPv4CIDRToRange", _ipv4_cidr_to_range)
+    _call("MACNumToString", _mac_num_to_string)
+    _call("MACStringToNum", _mac_string_to_num)
+    _call("bitmaskToList", _bitmask_to_list)
+    _call("mapApply", _map_apply)
+    _call(
+        "maxIntersectionsPosition",
         lambda a: _max_intersections(a, position=True),
     )
-    sql = _rewrite_calls(
-        sql, "maxIntersections",
-        lambda a: _max_intersections(a, position=False),
-    )
+    _call("maxIntersections", lambda a: _max_intersections(a, position=False))
     # sample moments from the population builtins: m3c/svar^1.5 and
     # m4c/svar^2 where svar = n/(n-1)·pvar — so the sample forms are the
     # population forms scaled by ((n-1)/n)^{3/2} and ((n-1)/n)^2
-    sql = _rewrite_calls(
-        sql, "skewSamp",
+    _call(
+        "skewSamp",
         lambda a: (
             f"(skewness({a[0]}) * pow((count({a[0]}) - 1) "
             f"/ CAST(count({a[0]}) AS DOUBLE), 1.5))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "kurtSamp",
+    _call(
+        "kurtSamp",
         lambda a: (
             f"((kurtosis({a[0]}) + 3) * pow((count({a[0]}) - 1) "
             f"/ CAST(count({a[0]}) AS DOUBLE), 2))"
         ),
     )
-    sql = _rewrite_calls(sql, "extractAll", _extract_all)
-    sql = _rewrite_calls(
-        sql, "extractURLParameter",
+    _call("extractAll", _extract_all)
+    _call(
+        "extractURLParameter",
         lambda a: f"coalesce(try_parse_url({a[0]}, 'QUERY', {a[1]}), '')",
     )
-    sql = _rewrite_calls(
-        sql, "base64Decode", lambda a: f"CAST(unbase64({a[0]}) AS STRING)"
-    )
+    _call("base64Decode", lambda a: f"CAST(unbase64({a[0]}) AS STRING)")
     # float classification
-    sql = _rewrite_calls(sql, "isNaN", lambda a: f"isnan({a[0]})")
-    sql = _rewrite_calls(
-        sql, "isInfinite",
+    _call("isNaN", lambda a: f"isnan({a[0]})")
+    _call(
+        "isInfinite",
         lambda a: f"(abs({a[0]}) = CAST('Infinity' AS DOUBLE))",
     )
-    sql = _rewrite_calls(
-        sql, "isFinite",
+    _call(
+        "isFinite",
         lambda a: f"(NOT isnan({a[0]}) AND abs({a[0]}) <> CAST('Infinity' AS DOUBLE))",
     )
-    sql = _rewrite_calls(
-        sql, "ifNotFinite",
+    _call(
+        "ifNotFinite",
         lambda a: (
             f"(CASE WHEN isnan({a[0]}) OR abs({a[0]}) = CAST('Infinity' AS DOUBLE)"
             f" THEN {a[1]} ELSE {a[0]} END)"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "positionCaseInsensitive",
+    _call(
+        "positionCaseInsensitive",
         lambda a: f"locate(lower({a[1]}), lower({a[0]}))",
     )
-    sql = _rewrite_calls(
-        sql, "countMatches",
+    _call(
+        "countMatches",
         lambda a: f"size(regexp_extract_all({a[0]}, {a[1]}, 0))",
     )
-    sql = _rewrite_calls(
-        sql, "countSubstrings",
+    _call(
+        "countSubstrings",
         lambda a: (
             f"(CASE WHEN length({a[1]}) = 0 THEN 0 ELSE "
             f"CAST((length({a[0]}) - length(replace({a[0]}, {a[1]}, ''))) "
@@ -5195,29 +5144,29 @@ def _translate_functions(sql: str) -> str:
         ),
     )
     # more array helpers
-    sql = _rewrite_calls(sql, "arrayPushBack", lambda a: f"concat({a[0]}, array({a[1]}))")
-    sql = _rewrite_calls(sql, "arrayPushFront", lambda a: f"concat(array({a[1]}), {a[0]})")
-    sql = _rewrite_calls(
-        sql, "arrayPopBack", lambda a: f"slice({a[0]}, 1, GREATEST(size({a[0]}) - 1, 0))"
+    _call("arrayPushBack", lambda a: f"concat({a[0]}, array({a[1]}))")
+    _call("arrayPushFront", lambda a: f"concat(array({a[1]}), {a[0]})")
+    _call(
+        "arrayPopBack", lambda a: f"slice({a[0]}, 1, GREATEST(size({a[0]}) - 1, 0))"
     )
-    sql = _rewrite_calls(
-        sql, "arrayPopFront",
+    _call(
+        "arrayPopFront",
         lambda a: f"slice({a[0]}, 2, GREATEST(size({a[0]}) - 1, 0))",
     )
-    sql = _rewrite_calls(sql, "arrayUniq", lambda a: f"size(array_distinct({a[0]}))")
-    sql = _rewrite_calls(
-        sql, "countEqual",
+    _call("arrayUniq", lambda a: f"size(array_distinct({a[0]}))")
+    _call(
+        "countEqual",
         lambda a: f"size(filter({a[0]}, __ce -> __ce = {a[1]}))",
     )
-    sql = _rewrite_calls(sql, "arrayAvg", _array_avg)
-    sql = _rewrite_calls(sql, "arrayDifference", _array_difference)
-    sql = _rewrite_calls(sql, "range", _range_seq)
+    _call("arrayAvg", _array_avg)
+    _call("arrayDifference", _array_difference)
+    _call("range", _range_seq)
     # numbers()/numbers_mt() table function → Spark's range() TABLE
     # function with the column renamed to CH's `number` (placed AFTER
     # the scalar range() rewrite so the emission survives verbatim)
     for _nb in ("numbers", "numbers_mt"):
-        sql = _rewrite_calls(
-            sql, _nb,
+        _call(
+            _nb,
             lambda a, n=_nb: (
                 f"(SELECT id AS number FROM range({a[0]}))"
                 if len(a) == 1 else
@@ -5229,89 +5178,77 @@ def _translate_functions(sql: str) -> str:
         )
     # weighted mean: sum(x·w)/sum(w); try_divide → NULL on zero weight
     # (never an ANSI runtime error)
-    sql = _rewrite_calls(
-        sql, "avgWeighted",
+    _call(
+        "avgWeighted",
         lambda a: f"try_divide(sum(({a[0]}) * ({a[1]})), sum({a[1]}))",
     )
     # argMin/argMax -If combinators (CH's most-used conditional arg aggs)
-    sql = _rewrite_calls(
-        sql, "argMaxIf",
+    _call(
+        "argMaxIf",
         lambda a: f"max_by({a[0]}, {a[1]}) FILTER (WHERE {a[2]})",
     )
-    sql = _rewrite_calls(
-        sql, "argMinIf",
+    _call(
+        "argMinIf",
         lambda a: f"min_by({a[0]}, {a[1]}) FILTER (WHERE {a[2]})",
     )
     # arrayFirst/arrayLast/arrayFirstIndex: CH lambda-first order
-    sql = _rewrite_calls(
-        sql, "arrayFirstIndex",
+    _call(
+        "arrayFirstIndex",
         lambda a: (
             f"coalesce(array_position(transform({a[1]}, {a[0]}), true), 0)"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "arrayFirst",
-        lambda a: f"try_element_at(filter({a[1]}, {a[0]}), 1)",
-    )
-    sql = _rewrite_calls(
-        sql, "arrayLast",
-        lambda a: f"try_element_at(filter({a[1]}, {a[0]}), -1)",
-    )
-    sql = _rewrite_calls(sql, "toDate32", lambda a: f"CAST({a[0]} AS DATE)")
+    _call("arrayFirst", lambda a: f"try_element_at(filter({a[1]}, {a[0]}), 1)")
+    _call("arrayLast", lambda a: f"try_element_at(filter({a[1]}, {a[0]}), -1)")
+    _call("toDate32", lambda a: f"CAST({a[0]} AS DATE)")
     # --- batch 3: silent-passthrough sweep (names that would otherwise
     # reach Spark's parser as unresolved routines) ---
-    sql = _rewrite_calls(
-        sql, "toRelativeYearNum", lambda a: f"year({a[0]})"
-    )
-    sql = _rewrite_calls(
-        sql, "toRelativeQuarterNum",
+    _call("toRelativeYearNum", lambda a: f"year({a[0]})")
+    _call(
+        "toRelativeQuarterNum",
         lambda a: f"(year({a[0]}) * 4 + quarter({a[0]}) - 1)",
     )
-    sql = _rewrite_calls(
-        sql, "toRelativeMonthNum",
+    _call(
+        "toRelativeMonthNum",
         lambda a: f"(year({a[0]}) * 12 + month({a[0]}))",
     )
-    sql = _rewrite_calls(sql, "today", lambda a: "current_date()")
-    sql = _rewrite_calls(
-        sql, "yesterday", lambda a: "date_sub(current_date(), 1)"
-    )
-    sql = _rewrite_calls(
-        sql, "now64",
+    _call("today", lambda a: "current_date()")
+    _call("yesterday", lambda a: "date_sub(current_date(), 1)")
+    _call(
+        "now64",
         # Spark timestamps are µs; CH precisions > 6 are unrepresentable
         lambda a: "current_timestamp()",
     )
-    sql = _rewrite_calls(
-        sql, "dateTrunc", lambda a: f"date_trunc({a[0]}, {a[1]})"
-    )
-    sql = _rewrite_calls(
-        sql, "fromModifiedJulianDay",
+    _call("dateTrunc", lambda a: f"date_trunc({a[0]}, {a[1]})")
+    _call(
+        "fromModifiedJulianDay",
         lambda a: f"date_add(DATE '1858-11-17', CAST({a[0]} AS INT))",
     )
-    sql = _rewrite_calls(
-        sql, "arrayLastIndex",
+    _call(
+        "arrayLastIndex",
         # CH lambda-first order; last matching 1-based index, 0 if none
         lambda a: (
             f"coalesce(array_max(filter(transform(transform({a[1]}, {a[0]}), "
             f"(__ali, __aj) -> IF(__ali, __aj + 1, 0)), __ak -> __ak > 0)), 0)"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "arrayElement",
+    _call(
+        "arrayElement",
         # same emission as the [k] subscript rewrite (negative k from the
         # end); CH's out-of-range → type default becomes NULL/error (noted
         # delta shared with the bracket form)
         lambda a: f"element_at({a[0]}, {a[1]})",
     )
-    sql = _rewrite_calls(sql, "hasSubstr", _has_substr)
-    sql = _rewrite_calls(
-        sql, "bitTestAll",
+    _call("hasSubstr", _has_substr)
+    _call(
+        "bitTestAll",
         lambda a: ("(" + " AND ".join(
             f"(shiftright({a[0]}, {b}) & 1) = 1" for b in a[1:]
         ) + ")") if len(a) >= 2
         else _refuse("bitTestAll needs (n, bit, …)"),
     )
-    sql = _rewrite_calls(
-        sql, "bitTestAny",
+    _call(
+        "bitTestAny",
         lambda a: ("(" + " OR ".join(
             f"(shiftright({a[0]}, {b}) & 1) = 1" for b in a[1:]
         ) + ")") if len(a) >= 2
@@ -5319,34 +5256,26 @@ def _translate_functions(sql: str) -> str:
     )
     # UTF8-suffixed string forms: Spark strings are code-point native, so
     # the plain builtins ARE the UTF8 semantics
-    sql = _rewrite_calls(sql, "leftUTF8", lambda a: f"left({a[0]}, {a[1]})")
-    sql = _rewrite_calls(sql, "rightUTF8", lambda a: f"right({a[0]}, {a[1]})")
-    sql = _rewrite_calls(
-        sql, "leftPadUTF8", lambda a: f"lpad({', '.join(a)})"
-    )
-    sql = _rewrite_calls(
-        sql, "rightPadUTF8", lambda a: f"rpad({', '.join(a)})"
-    )
-    sql = _rewrite_calls(
-        sql, "positionUTF8",
+    _call("leftUTF8", lambda a: f"left({a[0]}, {a[1]})")
+    _call("rightUTF8", lambda a: f"right({a[0]}, {a[1]})")
+    _call("leftPadUTF8", lambda a: f"lpad({', '.join(a)})")
+    _call("rightPadUTF8", lambda a: f"rpad({', '.join(a)})")
+    _call(
+        "positionUTF8",
         # locate (not instr): the later instr→positionCaseInsensitive
         # alias pass must never see this case-SENSITIVE form (it ran
         # after by ordering accident before; now structurally immune)
         lambda a: f"locate({a[1]}, {a[0]})" if len(a) == 2
         else f"locate({a[1]}, {a[0]}, {a[2]})",
     )
-    sql = _rewrite_calls(
-        sql, "multiSearchFirstPosition", _multi_search_first_position
-    )
-    sql = _rewrite_calls(
-        sql, "multiSearchFirstIndex", _multi_search_first_index
-    )
-    sql = _rewrite_calls(
-        sql, "multiSearchAllPositions",
+    _call("multiSearchFirstPosition", _multi_search_first_position)
+    _call("multiSearchFirstIndex", _multi_search_first_index)
+    _call(
+        "multiSearchAllPositions",
         lambda a: f"transform({a[1]}, __msn -> locate(__msn, {a[0]}))",
     )
-    sql = _rewrite_calls(
-        sql, "countSubstringsCaseInsensitive",
+    _call(
+        "countSubstringsCaseInsensitive",
         # all lengths measured on the LOWERED strings (case folding can
         # change code-point counts, e.g. İ)
         lambda a: (
@@ -5356,13 +5285,13 @@ def _translate_functions(sql: str) -> str:
         ),
     )
     # Spark strings cannot hold invalid UTF-8 — already valid by type
-    sql = _rewrite_calls(sql, "toValidUTF8", lambda a: f"({a[0]})")
-    sql = _rewrite_calls(
-        sql, "splitByWhitespace",
+    _call("toValidUTF8", lambda a: f"({a[0]})")
+    _call(
+        "splitByWhitespace",
         lambda a: f"filter(split({a[0]}, '\\\\s+'), __sw -> __sw != '')",
     )
-    sql = _rewrite_calls(
-        sql, "tryBase64Decode",
+    _call(
+        "tryBase64Decode",
         # CH: '' on malformed input — validate the alphabet/padding first
         # (Spark unbase64 is lenient and would emit garbage bytes)
         lambda a: (
@@ -5371,15 +5300,15 @@ def _translate_functions(sql: str) -> str:
             f"THEN CAST(unbase64({a[0]}) AS STRING) ELSE '' END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "regexpExtract",
+    _call(
+        "regexpExtract",
         # 2-arg form: first group if the literal pattern has one, else
         # the whole match (same smart default as CH extract())
         lambda a: _extract_regex(a) if len(a) == 2
         else f"regexp_extract({', '.join(a)})",
     )
-    sql = _rewrite_calls(
-        sql, "regexpQuoteMeta",
+    _call(
+        "regexpQuoteMeta",
         # CH's documented escape set: backslash | ( ) ^ $ . [ ] ? * + { : -
         # ('}' is NOT escaped by CH); '-' sits last in the class
         lambda a: (
@@ -5387,15 +5316,13 @@ def _translate_functions(sql: str) -> str:
             "'([\\\\\\\\|()^$.\\\\[\\\\]?*+{:-])', '\\\\\\\\$1')"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "translateUTF8", lambda a: f"translate({', '.join(a)})"
-    )
-    sql = _rewrite_calls(
-        sql, "mapContainsKeyLike",
+    _call("translateUTF8", lambda a: f"translate({', '.join(a)})")
+    _call(
+        "mapContainsKeyLike",
         lambda a: f"exists(map_keys({a[0]}), __mk -> __mk LIKE {a[1]})",
     )
-    sql = _rewrite_calls(
-        sql, "mapExtractKeyLike",
+    _call(
+        "mapExtractKeyLike",
         lambda a: f"map_filter({a[0]}, (__mk, __mv) -> __mk LIKE {a[1]})",
     )
     # -Stable aggregate variants: same math, numerically-stable algorithm
@@ -5409,11 +5336,9 @@ def _translate_functions(sql: str) -> str:
         ("stddevPopStable", "stddev_pop"),
         ("stddevSampStable", "stddev_samp"),
     ):
-        sql = _rewrite_calls(
-            sql, ch_stable, lambda a, s=spark_agg: f"{s}({', '.join(a)})"
-        )
-    sql = _rewrite_calls(
-        sql, "greatCircleAngle",
+        _call(ch_stable, lambda a, s=spark_agg: f"{s}({', '.join(a)})")
+    _call(
+        "greatCircleAngle",
         # central angle in degrees: the haversine arc without the radius
         lambda a: (
             f"degrees(2 * asin(sqrt("
@@ -5422,73 +5347,61 @@ def _translate_functions(sql: str) -> str:
             f"pow(sin(radians(({a[2]}) - ({a[0]})) / 2), 2))))"
         ),
     )
-    sql = _rewrite_calls(sql, "roundAge", _round_age)
-    sql = _rewrite_calls(sql, "roundDuration", _round_duration)
-    sql = _rewrite_calls(sql, "truncate", _truncate_scale)
+    _call("roundAge", _round_age)
+    _call("roundDuration", _round_duration)
+    _call("truncate", _truncate_scale)
     # bare trunc is the same CH function; Spark's trunc() is DATE-only,
     # so the passthrough broke numeric args (r9)
-    sql = _rewrite_calls(sql, "trunc", _truncate_scale)
-    sql = _rewrite_calls(sql, "caseWithExpr", _case_with_expression)
-    sql = _rewrite_calls(sql, "currentDatabase", lambda a: "current_database()")
-    sql = _rewrite_calls(sql, "currentUser", lambda a: "current_user()")
-    sql = _rewrite_calls(sql, "dotProduct", _dot_product)
+    _call("trunc", _truncate_scale)
+    _call("caseWithExpr", _case_with_expression)
+    _call("currentDatabase", lambda a: "current_database()")
+    _call("currentUser", lambda a: "current_user()")
+    _call("dotProduct", _dot_product)
     for norm_kind in ("L1", "L2", "Linf"):
-        sql = _rewrite_calls(
-            sql, f"{norm_kind}Norm",
-            lambda a, k=norm_kind: _vector_norm(a, k),
-        )
-        sql = _rewrite_calls(
-            sql, f"{norm_kind}Distance",
+        _call(f"{norm_kind}Norm", lambda a, k=norm_kind: _vector_norm(a, k))
+        _call(
+            f"{norm_kind}Distance",
             lambda a, k=norm_kind: _vector_distance(a, k),
         )
-    sql = _rewrite_calls(
-        sql, "L2SquaredDistance",
-        lambda a: _vector_distance(a, "L2Squared"),
-    )
-    sql = _rewrite_calls(sql, "cosineDistance", _cosine_distance)
+    _call("L2SquaredDistance", lambda a: _vector_distance(a, "L2Squared"))
+    _call("cosineDistance", _cosine_distance)
     # Lp-prefixed alias spellings route to the normalize/norm family
-    sql = _rewrite_calls(
-        sql, "L1Normalize", lambda a: _normalize_vec(a, "L1"))
-    sql = _rewrite_calls(
-        sql, "L2Normalize", lambda a: _normalize_vec(a, "L2"))
-    sql = _rewrite_calls(
-        sql, "normalizeL1", lambda a: _normalize_vec(a, "L1")
-    )
-    sql = _rewrite_calls(
-        sql, "normalizeL2", lambda a: _normalize_vec(a, "L2")
-    )
-    sql = _rewrite_calls(
-        sql, "arrayJaccardIndex",
+    _call("L1Normalize", lambda a: _normalize_vec(a, "L1"))
+    _call("L2Normalize", lambda a: _normalize_vec(a, "L2"))
+    _call("normalizeL1", lambda a: _normalize_vec(a, "L1"))
+    _call("normalizeL2", lambda a: _normalize_vec(a, "L2"))
+    _call(
+        "arrayJaccardIndex",
         lambda a: (
             f"(size(array_intersect({a[0]}, {a[1]})) "
             f"/ CAST(size(array_union({a[0]}, {a[1]})) AS DOUBLE))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "arrayPartialSort",
+    _call(
+        "arrayPartialSort",
         # CH sorts the first N and leaves the tail in UNSPECIFIED order —
         # a full sort is a valid (and deterministic) instance of that
         lambda a: f"array_sort({a[1]})",
     )
     # --- sweep tranche 2 ---
-    sql = _rewrite_calls(sql, "toISOYear", _to_iso_year)
-    sql = _rewrite_calls(sql, "toStartOfISOYear", _to_start_of_iso_year)
-    sql = _rewrite_calls(
-        sql, "toDaysSinceYearZero",
+    _call("toISOYear", _to_iso_year)
+    _call("toStartOfISOYear", _to_start_of_iso_year)
+    _call(
+        "toDaysSinceYearZero",
         # proleptic-Gregorian day count: 1970-01-01 is day 719528 (CH pin)
         lambda a: f"(datediff(CAST({a[0]} AS DATE), DATE '1970-01-01') + 719528)",
     )
-    sql = _rewrite_calls(
-        sql, "fromDaysSinceYearZero",
+    _call(
+        "fromDaysSinceYearZero",
         lambda a: f"date_add(DATE '1970-01-01', CAST(({a[0]}) - 719528 AS INT))",
     )
-    sql = _rewrite_calls(
-        sql, "toLastDayOfWeek",
+    _call(
+        "toLastDayOfWeek",
         # start-of-week + 6, inheriting toStartOfWeek's mode handling
         lambda a: f"date_add({_to_start_of_week(a)}, 6)",
     )
-    sql = _rewrite_calls(sql, "makeDate32", lambda a: f"make_date({', '.join(a)})")
-    sql = _rewrite_calls(sql, "makeDate", lambda a: f"make_date({', '.join(a)})")
+    _call("makeDate32", lambda a: f"make_date({', '.join(a)})")
+    _call("makeDate", lambda a: f"make_date({', '.join(a)})")
     def _make_dt64(a):
         # (y,m,d,h,mi,s[,fraction[,precision]]) — fraction folds into the
         # seconds argument exactly via integer-over-power division;
@@ -5517,41 +5430,36 @@ def _translate_functions(sql: str) -> str:
             "single session timezone)"
         )
 
-    sql = _rewrite_calls(sql, "makeDateTime64", _make_dt64)
-    sql = _rewrite_calls(
-        sql, "makeDateTime", lambda a: f"make_timestamp({', '.join(a)})"
-    )
-    sql = _rewrite_calls(
-        sql, "YYYYMMDDToDate",
+    _call("makeDateTime64", _make_dt64)
+    _call("makeDateTime", lambda a: f"make_timestamp({', '.join(a)})")
+    _call(
+        "YYYYMMDDToDate",
         lambda a: (
             f"try_to_date(CAST(CAST({a[0]} AS BIGINT) AS STRING), 'yyyyMMdd')"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "YYYYMMDDhhmmssToDateTime",
+    _call(
+        "YYYYMMDDhhmmssToDateTime",
         lambda a: (
             f"try_to_timestamp(CAST(CAST({a[0]} AS BIGINT) AS STRING), "
             f"'yyyyMMddHHmmss')"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "timestampSub",
-        lambda a: f"timestampadd({a[0]}, -({a[1]}), {a[2]})",
-    )
-    sql = _rewrite_calls(
-        sql, "sumCount",
+    _call("timestampSub", lambda a: f"timestampadd({a[0]}, -({a[1]}), {a[2]})")
+    _call(
+        "sumCount",
         # CH's (sum, count) tuple in the repo's tuple shape
         lambda a: (
             f"named_struct('_1', sum({a[0]}), '_2', count({a[0]}))"
         ),
     )
-    sql = _rewrite_calls(sql, "arrayDotProduct", _dot_product)
-    sql = _rewrite_calls(sql, "arrayCumSumNonNegative", _array_cumsum_nonneg)
-    sql = _rewrite_calls(sql, "arrayShingles", _array_shingles)
-    sql = _rewrite_calls(sql, "arrayEnumerateUniq", _array_enumerate_uniq)
-    sql = _rewrite_calls(sql, "arrayReverseFill", lambda a: _array_fill(a, True))
-    sql = _rewrite_calls(sql, "arrayFill", lambda a: _array_fill(a, False))
-    sql = _rewrite_calls(sql, "isIPAddressInRange", _ip_in_range)
+    _call("arrayDotProduct", _dot_product)
+    _call("arrayCumSumNonNegative", _array_cumsum_nonneg)
+    _call("arrayShingles", _array_shingles)
+    _call("arrayEnumerateUniq", _array_enumerate_uniq)
+    _call("arrayReverseFill", lambda a: _array_fill(a, True))
+    _call("arrayFill", lambda a: _array_fill(a, False))
+    _call("isIPAddressInRange", _ip_in_range)
 
     def _initcap_ch(a):
         # CH words are ALPHANUMERIC runs — a letter after ANY
@@ -5570,13 +5478,11 @@ def _translate_functions(sql: str) -> str:
             ),
         )
 
-    sql = _rewrite_calls(sql, "initcapUTF8", _initcap_ch)
-    sql = _rewrite_calls(sql, "initcap", _initcap_ch)
-    sql = _rewrite_calls(
-        sql, "positiveModulo", lambda a: f"pmod({a[0]}, {a[1]})"
-    )
-    sql = _rewrite_calls(
-        sql, "bitmaskToArray",
+    _call("initcapUTF8", _initcap_ch)
+    _call("initcap", _initcap_ch)
+    _call("positiveModulo", lambda a: f"pmod({a[0]}, {a[1]})")
+    _call(
+        "bitmaskToArray",
         lambda a: (
             f"CASE WHEN CAST({a[0]} AS BIGINT) < 0 THEN "
             f"CAST(raise_error('bitmaskToArray: negative input') "
@@ -5586,8 +5492,8 @@ def _translate_functions(sql: str) -> str:
             f"__p -> (CAST({a[0]} AS BIGINT) & __p) <> 0) END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "bitPositionsToArray",
+    _call(
+        "bitPositionsToArray",
         lambda a: (
             f"CASE WHEN CAST({a[0]} AS BIGINT) < 0 THEN "
             f"CAST(raise_error('bitPositionsToArray: negative input') "
@@ -5599,59 +5505,42 @@ def _translate_functions(sql: str) -> str:
     )
     for dec_name, dec_p in (("toDecimal32", 9), ("toDecimal64", 18),
                             ("toDecimal128", 38)):
-        sql = _rewrite_calls(
-            sql, dec_name,
+        _call(
+            dec_name,
             lambda a, p=dec_p: (
                 f"CAST({a[0]} AS DECIMAL({p}, {a[1].strip()}))"
             ),
         )
-    sql = _rewrite_calls(
-        sql, "widthBucket", lambda a: f"width_bucket({', '.join(a)})"
-    )
-    sql = _rewrite_calls(
-        sql, "editDistanceUTF8", lambda a: f"levenshtein({a[0]}, {a[1]})"
-    )
-    sql = _rewrite_calls(
-        sql, "mapExists", lambda a: _map_pred(a, "exists", "mapExists")
-    )
-    sql = _rewrite_calls(
-        sql, "mapAll", lambda a: _map_pred(a, "forall", "mapAll")
-    )
-    sql = _rewrite_calls(
-        sql, "isZeroOrNull",
-        lambda a: f"(({a[0]}) = 0 OR ({a[0]}) IS NULL)",
-    )
+    _call("widthBucket", lambda a: f"width_bucket({', '.join(a)})")
+    _call("editDistanceUTF8", lambda a: f"levenshtein({a[0]}, {a[1]})")
+    _call("mapExists", lambda a: _map_pred(a, "exists", "mapExists"))
+    _call("mapAll", lambda a: _map_pred(a, "forall", "mapAll"))
+    _call("isZeroOrNull", lambda a: f"(({a[0]}) = 0 OR ({a[0]}) IS NULL)")
     # --- sweep tranche 4: datetime parse/format aliases ---
-    sql = _rewrite_calls(
-        sql, "parseDateTimeOrNull", lambda a: _parse_datetime(a, "null")
-    )
-    sql = _rewrite_calls(
-        sql, "parseDateTimeOrZero", lambda a: _parse_datetime(a, "zero")
-    )
+    _call("parseDateTimeOrNull", lambda a: _parse_datetime(a, "null"))
+    _call("parseDateTimeOrZero", lambda a: _parse_datetime(a, "zero"))
     # Joda patterns coincide with Spark's java.time patterns on the
     # common letters (yyyy MM dd HH mm ss SSS EEE MMM) — passed through
-    sql = _rewrite_calls(
-        sql, "parseDateTimeInJodaSyntaxOrNull",
+    _call(
+        "parseDateTimeInJodaSyntaxOrNull",
         lambda a: f"try_to_timestamp({a[0]}, {a[1]})",
     )
-    sql = _rewrite_calls(
-        sql, "parseDateTimeInJodaSyntaxOrZero",
+    _call(
+        "parseDateTimeInJodaSyntaxOrZero",
         lambda a: (
             f"coalesce(try_to_timestamp({a[0]}, {a[1]}), "
             f"TIMESTAMP '1970-01-01 00:00:00')"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "parseDateTimeInJodaSyntax",
+    _call(
+        "parseDateTimeInJodaSyntax",
         lambda a: f"to_timestamp({a[0]}, {a[1]})",
     )
-    sql = _rewrite_calls(
-        sql, "formatDateTimeInJodaSyntax",
+    _call(
+        "formatDateTimeInJodaSyntax",
         lambda a: f"date_format({a[0]}, {a[1]})",
     )
-    sql = _rewrite_calls(
-        sql, "parseDateTime", lambda a: _parse_datetime(a, "throw")
-    )
+    _call("parseDateTime", lambda a: _parse_datetime(a, "throw"))
 
     def _add_sub_date(a, sign):
         if len(a) != 2:
@@ -5661,18 +5550,18 @@ def _translate_functions(sql: str) -> str:
         fn = "date_add" if sign == "+" else "date_sub"
         return f"{fn}({a[0]}, CAST({a[1]} AS INT))"
 
-    sql = _rewrite_calls(sql, "addDate", lambda a: _add_sub_date(a, "+"))
-    sql = _rewrite_calls(sql, "subDate", lambda a: _add_sub_date(a, "-"))
+    _call("addDate", lambda a: _add_sub_date(a, "+"))
+    _call("subDate", lambda a: _add_sub_date(a, "-"))
     # dateAdd 3-arg resolves to Spark's own dateadd(unit, n, d); the
     # 2-arg INTERVAL form and dateSub (no Spark twin) need rewrites
-    sql = _rewrite_calls(
-        sql, "dateAdd",
+    _call(
+        "dateAdd",
         lambda a: f"(({a[0]}) + ({a[1]}))"
         if len(a) == 2 and re.match(r"(?is)^\s*INTERVAL\b", a[1])
         else f"dateAdd({', '.join(a)})",
     )
-    sql = _rewrite_calls(
-        sql, "dateSub",
+    _call(
+        "dateSub",
         lambda a: f"(({a[0]}) - ({a[1]}))"
         if len(a) == 2 and re.match(r"(?is)^\s*INTERVAL\b", a[1])
         else (
@@ -5681,15 +5570,15 @@ def _translate_functions(sql: str) -> str:
             else _refuse("dateSub takes (unit, n, date) or (date, INTERVAL …)")
         ),
     )
-    sql = _rewrite_calls(
-        sql, "splitByNonAlpha",
+    _call(
+        "splitByNonAlpha",
         lambda a: f"filter(split({a[0]}, '[^0-9A-Za-z]+'), __sn -> __sn != '')",
     )
     # tokens(s) = CH's default tokenizer (split at non-alphanumeric runs,
     # empties dropped) — identical to splitByNonAlpha; the 2-arg
     # tokenizer-mode form ('ngram'/'split'/'no_op') refuses (r9)
-    sql = _rewrite_calls(
-        sql, "tokens",
+    _call(
+        "tokens",
         lambda a: (
             f"filter(split({a[0]}, '[^0-9A-Za-z]+'), __tk -> __tk != '')"
             if len(a) == 1
@@ -5701,8 +5590,8 @@ def _translate_functions(sql: str) -> str:
     )
     # ngrams(s, n): character n-grams over codepoints (Spark substring is
     # codepoint-based like CH's UTF-8 walk); shorter-than-n → [] like CH
-    sql = _rewrite_calls(
-        sql, "ngrams",
+    _call(
+        "ngrams",
         lambda a: (
             f"(CASE WHEN length({a[0]}) >= ({a[1]}) THEN "
             f"transform(sequence(1, length({a[0]}) - ({a[1]}) + 1), "
@@ -5713,37 +5602,30 @@ def _translate_functions(sql: str) -> str:
     )
     # --- late-r9 sweep: names that previously reached Spark as
     # unresolved routines (loud, but untranslated) ---
-    sql = _rewrite_calls(
-        sql, "characterLength", lambda a: f"char_length({a[0]})")
-    sql = _rewrite_calls(
-        sql, "startsWithUTF8", lambda a: f"startswith({a[0]}, {a[1]})")
-    sql = _rewrite_calls(
-        sql, "endsWithUTF8", lambda a: f"endswith({a[0]}, {a[1]})")
+    _call("characterLength", lambda a: f"char_length({a[0]})")
+    _call("startsWithUTF8", lambda a: f"startswith({a[0]}, {a[1]})")
+    _call("endsWithUTF8", lambda a: f"endswith({a[0]}, {a[1]})")
     # max2/min2 return Float64 in CH and propagate any NULL (Spark's
     # greatest/least SKIP nulls, so the IF guard is load-bearing)
     for _m2, _gf in (("max2", "greatest"), ("min2", "least")):
-        sql = _rewrite_calls(
-            sql, _m2,
-            lambda a, f=_gf: (
+        _call(
+            _m2,
+            lambda a, f=_gf, n=_m2: (
                 f"IF(({a[0]}) IS NULL OR ({a[1]}) IS NULL, "
                 f"CAST(NULL AS DOUBLE), "
                 f"{f}(CAST({a[0]} AS DOUBLE), CAST({a[1]} AS DOUBLE)))"
-            ) if len(a) == 2 else _refuse(f"{_m2} takes exactly 2 args"),
+            ) if len(a) == 2 else _refuse(f"{n} takes exactly 2 args"),
         )
-    sql = _rewrite_calls(
-        sql, "notLike", lambda a: f"(NOT (({a[0]}) LIKE ({a[1]})))")
-    sql = _rewrite_calls(
-        sql, "notILike",
-        lambda a: f"(NOT (lower({a[0]}) LIKE lower({a[1]})))")
+    _call("notLike", lambda a: f"(NOT (({a[0]}) LIKE ({a[1]})))")
+    _call("notILike", lambda a: f"(NOT (lower({a[0]}) LIKE lower({a[1]})))")
     # toJSONString: Spark's to_json covers CH's struct/map/array cases;
     # scalar arguments fail loudly at analysis (a documented delta —
     # CH also serializes scalars)
-    sql = _rewrite_calls(sql, "toJSONString", lambda a: f"to_json({a[0]})")
-    sql = _rewrite_calls(
-        sql, "JSONArrayLength", lambda a: f"json_array_length({a[0]})")
+    _call("toJSONString", lambda a: f"to_json({a[0]})")
+    _call("JSONArrayLength", lambda a: f"json_array_length({a[0]})")
     # vector-norm tail: normalizeLinf and the generic LpNorm
-    sql = _rewrite_calls(
-        sql, "normalizeLinf",
+    _call(
+        "normalizeLinf",
         lambda a: (
             f"element_at(transform(array(named_struct('a', {a[0]}, 'n', "
             f"array_max(transform({a[0]}, __vx -> abs(CAST(__vx AS "
@@ -5751,8 +5633,8 @@ def _translate_functions(sql: str) -> str:
             f"CAST(__vx AS DOUBLE) / __nl.n)), 1)"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "LinfNormalize",
+    _call(
+        "LinfNormalize",
         lambda a: (
             f"element_at(transform(array(named_struct('a', {a[0]}, 'n', "
             f"array_max(transform({a[0]}, __vx -> abs(CAST(__vx AS "
@@ -5760,8 +5642,8 @@ def _translate_functions(sql: str) -> str:
             f"CAST(__vx AS DOUBLE) / __nl.n)), 1)"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "LpDistance",
+    _call(
+        "LpDistance",
         lambda a: (
             f"power(aggregate(zip_with({a[0]}, {a[1]}, (__da, __db) -> "
             f"power(abs(CAST(__da AS DOUBLE) - CAST(__db AS DOUBLE)), "
@@ -5769,44 +5651,37 @@ def _translate_functions(sql: str) -> str:
             f"1.0 / ({a[2]}))"
         ) if len(a) == 3 else _refuse("LpDistance takes (v1, v2, p)"),
     )
-    sql = _rewrite_calls(
-        sql, "arrayRotateRight",
+    _call(
+        "arrayRotateRight",
         lambda a: _array_rotate_left([a[0], f"-({a[1]})"])
         if len(a) == 2 else _refuse("arrayRotateRight needs (array, n)"),
     )
     # parseTimeDelta / decode[HTML|XML]Component / RIPEMD160 — Arrow
     # scalars (unit grammar, WHATWG entity table, OpenSSL digest)
-    sql = _rewrite_calls(
-        sql, "parseTimeDelta",
-        lambda a: f"ch_parse_time_delta({a[0]})")
-    sql = _rewrite_calls(
-        sql, "decodeHTMLComponent",
-        lambda a: f"ch_decode_html({a[0]})")
-    sql = _rewrite_calls(
-        sql, "decodeXMLComponent",
-        lambda a: f"ch_decode_xml({a[0]})")
+    _call("parseTimeDelta", lambda a: f"ch_parse_time_delta({a[0]})")
+    _call("decodeHTMLComponent", lambda a: f"ch_decode_html({a[0]})")
+    _call("decodeXMLComponent", lambda a: f"ch_decode_xml({a[0]})")
     # encodeXMLComponent: the five predefined XML entities, & first —
     # pure JVM replace chain
-    sql = _rewrite_calls(
-        sql, "encodeXMLComponent",
+    _call(
+        "encodeXMLComponent",
         lambda a: (
             f"replace(replace(replace(replace(replace({a[0]}, "
             f"'&', '&amp;'), '<', '&lt;'), '>', '&gt;'), "
             f"'\"', '&quot;'), '''', '&apos;')"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "RIPEMD160", _crc_fn("RIPEMD160", "ch_ripemd160"))
+    _call("RIPEMD160", _crc_fn("RIPEMD160", "ch_ripemd160"))
     # MD4 (r10, previously refused): rides OpenSSL's LEGACY provider —
     # same string-only argument contract as the other digests; raw 16
     # bytes so hex(MD4(s)) composes like the MD5 family
-    sql = _rewrite_calls(sql, "MD4", _crc_fn("MD4", "ch_md4"))
+    _call("MD4", _crc_fn("MD4", "ch_md4"))
     # extractKeyValuePairs: the DEFAULT grammar only (':' key-value
     # delimiter, ' ,;' pair delimiters); custom delimiters / quoting
     # refuse — CH's state machine also honors quoting, a documented
     # delta for values containing the delimiters
-    sql = _rewrite_calls(
-        sql, "extractKeyValuePairs",
+    _call(
+        "extractKeyValuePairs",
         lambda a: (
             f"map_from_entries(transform(filter(transform("
             f"split({a[0]}, '[ ,;]+'), __kv -> split(__kv, ':', 2)), "
@@ -5817,8 +5692,8 @@ def _translate_functions(sql: str) -> str:
             " the default grammar translates"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "LpNorm",
+    _call(
+        "LpNorm",
         lambda a: (
             f"power(aggregate({a[0]}, CAST(0 AS DOUBLE), (__lp, __vx) -> "
             f"__lp + power(abs(CAST(__vx AS DOUBLE)), {a[1]})), "
@@ -5827,35 +5702,35 @@ def _translate_functions(sql: str) -> str:
     )
     # URL tail: netloc/port/queryStringAndFragment/cutWWW (same
     # ''-on-null conventions as the rest of the URL family)
-    sql = _rewrite_calls(
-        sql, "netloc",
+    _call(
+        "netloc",
         lambda a: f"coalesce(try_parse_url({a[0]}, 'AUTHORITY'), '')")
-    sql = _rewrite_calls(
-        sql, "port",
+    _call(
+        "port",
         lambda a: (
             f"CAST(coalesce(nullif(regexp_extract(coalesce(try_parse_url("
             f"{a[0]}, 'AUTHORITY'), ''), ':([0-9]+)$', 1), ''), "
             f"{a[1] if len(a) == 2 else '0'}) AS INT)"
         ) if len(a) in (1, 2) else _refuse("port takes (url[, default])"),
     )
-    sql = _rewrite_calls(
-        sql, "queryStringAndFragment",
+    _call(
+        "queryStringAndFragment",
         lambda a: (
             f"concat(coalesce(try_parse_url({a[0]}, 'QUERY'), ''), "
             f"IF(coalesce(try_parse_url({a[0]}, 'REF'), '') = '', '', "
             f"concat('#', try_parse_url({a[0]}, 'REF'))))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "cutWWW",
+    _call(
+        "cutWWW",
         lambda a: (
             f"regexp_replace({a[0]}, "
             f"'^([A-Za-z][A-Za-z0-9+.-]*://)?www\\\\.', '$1')"
         ),
     )
     # pointInEllipses: deterministic arithmetic, UInt8 result like CH
-    sql = _rewrite_calls(
-        sql, "pointInEllipses",
+    _call(
+        "pointInEllipses",
         lambda a: (
             "CAST((" + " OR ".join(
                 f"(power((CAST({a[0]} AS DOUBLE) - ({a[2 + 4 * k]})) / "
@@ -5871,64 +5746,54 @@ def _translate_functions(sql: str) -> str:
     # roaring-bitmap family as deterministic array-set algebra: a
     # "bitmap" is a distinct array, bitmapToArray sorts ascending like
     # CH.  The *state* aggregates (groupBitmapAnd/Or/Xor) stay refused.
-    sql = _rewrite_calls(
-        sql, "bitmapBuild", lambda a: f"array_distinct({a[0]})")
-    sql = _rewrite_calls(
-        sql, "bitmapToArray",
-        lambda a: f"array_sort(array_distinct({a[0]}))")
-    sql = _rewrite_calls(
-        sql, "bitmapCardinality",
-        lambda a: f"size(array_distinct({a[0]}))")
+    _call("bitmapBuild", lambda a: f"array_distinct({a[0]})")
+    _call("bitmapToArray", lambda a: f"array_sort(array_distinct({a[0]}))")
+    _call("bitmapCardinality", lambda a: f"size(array_distinct({a[0]}))")
     for _bn, _bf in (("bitmapAnd", "array_intersect"),
                      ("bitmapOr", "array_union"),
                      ("bitmapAndnot", "array_except")):
-        sql = _rewrite_calls(
-            sql, _bn, lambda a, f=_bf: f"{f}({a[0]}, {a[1]})")
-        sql = _rewrite_calls(
-            sql, _bn + "Cardinality",
+        _call(_bn, lambda a, f=_bf: f"{f}({a[0]}, {a[1]})")
+        _call(
+            _bn + "Cardinality",
             lambda a, f=_bf: f"size({f}({a[0]}, {a[1]}))")
-    sql = _rewrite_calls(
-        sql, "bitmapXor",
+    _call(
+        "bitmapXor",
         lambda a: (f"array_union(array_except({a[0]}, {a[1]}), "
                    f"array_except({a[1]}, {a[0]}))"))
-    sql = _rewrite_calls(
-        sql, "bitmapXorCardinality",
+    _call(
+        "bitmapXorCardinality",
         lambda a: (f"size(array_union(array_except({a[0]}, {a[1]}), "
                    f"array_except({a[1]}, {a[0]})))"))
-    sql = _rewrite_calls(
-        sql, "bitmapContains",
-        lambda a: f"array_contains({a[0]}, {a[1]})")
-    sql = _rewrite_calls(
-        sql, "bitmapHasAll",
+    _call("bitmapContains", lambda a: f"array_contains({a[0]}, {a[1]})")
+    _call(
+        "bitmapHasAll",
         lambda a: f"forall({a[1]}, __bm -> array_contains({a[0]}, __bm))")
-    sql = _rewrite_calls(
-        sql, "bitmapHasAny",
-        lambda a: f"arrays_overlap({a[0]}, {a[1]})")
+    _call("bitmapHasAny", lambda a: f"arrays_overlap({a[0]}, {a[1]})")
     # CH-docs empty-bitmap sentinels: min → UINT32_MAX, max → 0
-    sql = _rewrite_calls(
-        sql, "bitmapMin",
+    _call(
+        "bitmapMin",
         lambda a: f"coalesce(array_min({a[0]}), CAST(4294967295 AS BIGINT))")
-    sql = _rewrite_calls(
-        sql, "bitmapMax",
+    _call(
+        "bitmapMax",
         lambda a: f"coalesce(array_max({a[0]}), CAST(0 AS BIGINT))")
     # extractAllGroups forms (literal pattern so the group count is
     # static, same counting rule as extractGroups)
-    sql = _rewrite_calls(
-        sql, "extractAllGroupsHorizontal",
+    _call(
+        "extractAllGroupsHorizontal",
         lambda a: _extract_all_groups(a, "horizontal"))
-    sql = _rewrite_calls(
-        sql, "extractAllGroupsVertical",
+    _call(
+        "extractAllGroupsVertical",
         lambda a: _extract_all_groups(a, "vertical"))
-    sql = _rewrite_calls(
-        sql, "extractAllGroups",
+    _call(
+        "extractAllGroups",
         lambda a: _extract_all_groups(a, "vertical"))  # CH alias
     # byteHammingDistance/mismatches: differing bytes over the common
     # prefix + the length difference (CH docs convention; the classic
     # 'karolin'/'kathrin' = 3 example is pinned in tests)
     for _hn in ("byteHammingDistance", "mismatches"):
-        sql = _rewrite_calls(
-            sql, _hn,
-            lambda a: (
+        _call(
+            _hn,
+            lambda a, n=_hn: (
                 f"IF(({a[0]}) IS NULL OR ({a[1]}) IS NULL, "
                 f"CAST(NULL AS BIGINT), "
                 f"element_at(transform(array(named_struct("
@@ -5943,46 +5808,46 @@ def _translate_functions(sql: str) -> str:
                 f"CAST(1 AS BIGINT)))) "
                 f"+ abs(octet_length(__bh.ba) - octet_length(__bh.bb))"
                 f"), 1))"
-            ) if len(a) == 2 else _refuse(f"{_hn} takes exactly 2 strings"),
+            ) if len(a) == 2 else _refuse(f"{n} takes exactly 2 strings"),
         )
     # arrayShift with an EXPLICIT fill (the 2-arg form pads with the
     # element type's default, invisible at SQL level → refuses)
-    sql = _rewrite_calls(sql, "arrayShiftLeft", _array_shift_fn(True))
-    sql = _rewrite_calls(sql, "arrayShiftRight", _array_shift_fn(False))
+    _call("arrayShiftLeft", _array_shift_fn(True))
+    _call("arrayShiftRight", _array_shift_fn(False))
     # decimal OrNull/OrZero tail (256-bit stays refused: > DECIMAL(38))
     for _dw, _dp in (("32", 9), ("64", 18), ("128", 38)):
-        sql = _rewrite_calls(
-            sql, f"toDecimal{_dw}OrNull",
+        _call(
+            f"toDecimal{_dw}OrNull",
             lambda a, p=_dp: (
                 f"try_cast({a[0]} AS DECIMAL({p}, {a[1].strip()}))"
             ) if len(a) == 2 else _refuse("toDecimalNOrNull takes (x, s)"),
         )
-        sql = _rewrite_calls(
-            sql, f"toDecimal{_dw}OrZero",
+        _call(
+            f"toDecimal{_dw}OrZero",
             lambda a, p=_dp: (
                 f"coalesce(try_cast({a[0]} AS DECIMAL({p}, "
                 f"{a[1].strip()})), CAST(0 AS DECIMAL({p}, "
                 f"{a[1].strip()})))"
             ) if len(a) == 2 else _refuse("toDecimalNOrZero takes (x, s)"),
         )
-    sql = _rewrite_calls(
-        sql, "fromUnixTimestampInJodaSyntax",
+    _call(
+        "fromUnixTimestampInJodaSyntax",
         lambda a: (
             f"date_format(timestamp_seconds({a[0]}), {a[1]})"
             if len(a) == 2 else f"timestamp_seconds({a[0]})"
         ),
     )
     # --- sweep tranche 3 ---
-    sql = _rewrite_calls(
-        sql, "toUUIDOrZero",
+    _call(
+        "toUUIDOrZero",
         lambda a: (
             f"CASE WHEN {a[0]} IS NULL THEN CAST(NULL AS STRING) "
             f"WHEN {a[0]} RLIKE '{_UUID_RE_SQL}' THEN lower({a[0]}) "
             f"ELSE '00000000-0000-0000-0000-000000000000' END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "toUUID",
+    _call(
+        "toUUID",
         # CH toUUID THROWS on malformed input (toUUIDOrNull is the safe
         # form) — mirrored with a lazy raise_error branch
         lambda a: (
@@ -5992,16 +5857,16 @@ def _translate_functions(sql: str) -> str:
             f"{a[0]})) AS STRING) END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "UUIDv7ToDateTime",
+    _call(
+        "UUIDv7ToDateTime",
         # v7 layout: the first 48 bits are unix milliseconds
         lambda a: (
             f"timestamp_millis(CAST(conv(substring(translate({a[0]}, "
             f"'-', ''), 1, 12), 16, 10) AS BIGINT))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "ULIDStringToDateTime",
+    _call(
+        "ULIDStringToDateTime",
         # ULID: first 10 Crockford-base32 chars are unix ms — remap the
         # Crockford alphabet (no I, L, O, U) onto standard base-32 digits
         # and let conv() do the arithmetic
@@ -6011,16 +5876,16 @@ def _translate_functions(sql: str) -> str:
             f"32, 10) AS BIGINT))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "toIPv4OrZero",
+    _call(
+        "toIPv4OrZero",
         lambda a: (
             f"CASE WHEN {a[0]} IS NULL THEN CAST(NULL AS STRING) "
             f"WHEN {a[0]} RLIKE '{_IPV4_RE_SQL}' THEN {a[0]} "
             f"ELSE '0.0.0.0' END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "toIPv4",
+    _call(
+        "toIPv4",
         lambda a: (
             f"CASE WHEN {a[0]} IS NULL THEN CAST(NULL AS STRING) "
             f"WHEN {a[0]} RLIKE '{_IPV4_RE_SQL}' THEN {a[0]} "
@@ -6028,8 +5893,8 @@ def _translate_functions(sql: str) -> str:
             f"{a[0]})) AS STRING) END"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "IPv4NumToStringClassC",
+    _call(
+        "IPv4NumToStringClassC",
         lambda a: (
             f"concat_ws('.', "
             f"CAST((CAST({a[0]} AS BIGINT) DIV 16777216) % 256 AS STRING), "
@@ -6038,27 +5903,22 @@ def _translate_functions(sql: str) -> str:
             f"'xxx')"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "firstLine",
+    _call(
+        "firstLine",
         lambda a: f"element_at(split({a[0]}, '\\\\r\\\\n|\\\\r|\\\\n'), 1)",
     )
-    sql = _rewrite_calls(
-        sql, "hasTokenCaseInsensitive",
+    _call(
+        "hasTokenCaseInsensitive",
         lambda a: _has_token(a, True, False, "hasTokenCaseInsensitive"),
     )
-    sql = _rewrite_calls(
-        sql, "hasTokenOrNull",
+    _call(
+        "hasTokenOrNull",
         lambda a: _has_token(a, False, True, "hasTokenOrNull"),
     )
-    sql = _rewrite_calls(
-        sql, "hasToken", lambda a: _has_token(a, False, False, "hasToken")
-    )
-    sql = _rewrite_calls(
-        sql, "substringIndexUTF8",
-        lambda a: f"substring_index({', '.join(a)})",
-    )
-    sql = _rewrite_calls(
-        sql, "stringCompare",
+    _call("hasToken", lambda a: _has_token(a, False, False, "hasToken"))
+    _call("substringIndexUTF8", lambda a: f"substring_index({', '.join(a)})")
+    _call(
+        "stringCompare",
         # byte order == Spark's UTF8_BINARY collation order; only the
         # 2-arg form (offset/length variants are refused)
         lambda a: (
@@ -6073,8 +5933,8 @@ def _translate_functions(sql: str) -> str:
     # formatReadableTimeDelta (r9): CH docs examples pin the 365/30.5
     # decomposition constants, the ', '/' and ' wording and plurals;
     # the 3-arg minimum_unit form is CH-version-dependent and refuses
-    sql = _rewrite_calls(
-        sql, "formatReadableTimeDelta",
+    _call(
+        "formatReadableTimeDelta",
         lambda a: (
             f"ch_time_delta({a[0]}, 'years')" if len(a) == 1
             else f"ch_time_delta({a[0]}, {a[1]})" if len(a) == 2
@@ -6087,77 +5947,71 @@ def _translate_functions(sql: str) -> str:
     )
     # stem(language, word): ctypes onto the SAME libstemmer CH links —
     # CH parity by construction (docs example pinned in tests)
-    sql = _rewrite_calls(
-        sql, "stem",
+    _call(
+        "stem",
         lambda a: f"ch_stem({a[0]}, {a[1]})" if len(a) == 2 else _refuse(
             "stem takes exactly (language, word)"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "formatReadableDecimalSize",
+    _call(
+        "formatReadableDecimalSize",
         lambda a: _format_readable(
             a[0], 1000.0,
             [" B", " KB", " MB", " GB", " TB", " PB", " EB", " ZB",
              " YB"],
         ),
     )
-    sql = _rewrite_calls(
-        sql, "firstValue", lambda a: f"first_value({', '.join(a)})"
-    )
-    sql = _rewrite_calls(
-        sql, "lastValue", lambda a: f"last_value({', '.join(a)})"
-    )
-    sql = _rewrite_calls(
-        sql, "singleValueOrNull",
+    _call("firstValue", lambda a: f"first_value({', '.join(a)})")
+    _call("lastValue", lambda a: f"last_value({', '.join(a)})")
+    _call(
+        "singleValueOrNull",
         lambda a: (
             f"IF(count(DISTINCT {a[0]}) = 1, max({a[0]}), NULL)"
         ),
     )
-    sql = _rewrite_calls(sql, "intervalLengthSum", _interval_length_sum)
+    _call("intervalLengthSum", _interval_length_sum)
     # time-decay aggregates (r8): deterministic given (value, time)
-    sql = _rewrite_parametric(
-        sql, "exponentialMovingAverage", _exp_moving_average,
+    _pass(_rewrite_parametric,
+        "exponentialMovingAverage", _exp_moving_average,
         window_emit=lambda p, a, o: _exp_moving_average(p, a, over=o))
     for _kind in ("Avg", "Sum", "Count", "Max"):
-        sql = _rewrite_parametric(
-            sql, f"exponentialTimeDecayed{_kind}", _exp_time_decayed(_kind),
+        _pass(_rewrite_parametric,
+            f"exponentialTimeDecayed{_kind}", _exp_time_decayed(_kind),
             window_emit=_exp_time_decayed_window(_kind))
-    sql = _rewrite_calls(sql, "deltaSumTimestamp", _delta_sum_timestamp)
-    sql = _non_negative_derivative_pass(sql)
-    sql = _rewrite_calls(sql, "lagInFrame", lambda a: f"lag({', '.join(a)})")
-    sql = _rewrite_calls(sql, "leadInFrame", lambda a: f"lead({', '.join(a)})")
-    sql = _rewrite_calls(
-        sql, "timezoneOffset",
+    _call("deltaSumTimestamp", _delta_sum_timestamp)
+    _on("nonNegativeDerivative", _non_negative_derivative_pass)
+    _call("lagInFrame", lambda a: f"lag({', '.join(a)})")
+    _call("leadInFrame", lambda a: f"lead({', '.join(a)})")
+    _call(
+        "timezoneOffset",
         lambda a: (
             f"(unix_timestamp({a[0]}) - unix_timestamp("
             f"to_utc_timestamp({a[0]}, current_timezone())))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "toStartOfMicrosecond", lambda a: f"CAST({a[0]} AS TIMESTAMP)"
-    )
-    sql = _rewrite_calls(
-        sql, "toStartOfNanosecond",
+    _call("toStartOfMicrosecond", lambda a: f"CAST({a[0]} AS TIMESTAMP)")
+    _call(
+        "toStartOfNanosecond",
         # Spark timestamps are µs-resolution — the µs value IS the floor
         lambda a: f"CAST({a[0]} AS TIMESTAMP)",
     )
-    sql = _rewrite_calls(
-        sql, "toStartOfMillisecond",
+    _call(
+        "toStartOfMillisecond",
         # pmod-based FLOOR (DIV truncates toward zero, wrong pre-1970)
         lambda a: (
             f"timestamp_micros(unix_micros(CAST({a[0]} AS TIMESTAMP)) "
             f"- pmod(unix_micros(CAST({a[0]} AS TIMESTAMP)), 1000))"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "toMillisecond",
+    _call(
+        "toMillisecond",
         lambda a: (
             f"CAST(pmod(unix_micros(CAST({a[0]} AS TIMESTAMP)), 1000000) "
             f"DIV 1000 AS INT)"
         ),
     )
-    sql = _rewrite_calls(
-        sql, "snowflakeToDateTime64",
+    _call(
+        "snowflakeToDateTime64",
         lambda a: (
             f"timestamp_millis(shiftright(CAST({a[0]} AS BIGINT), 22) "
             "+ 1288834974657)"
@@ -6168,8 +6022,8 @@ def _translate_functions(sql: str) -> str:
             )
         ),
     )
-    sql = _rewrite_calls(
-        sql, "dateTime64ToSnowflake",
+    _call(
+        "dateTime64ToSnowflake",
         lambda a: f"shiftleft(unix_millis({a[0]}) - 1288834974657, 22)",
     )
     # quantileExactLow/High(0.5)(x): python median_low/median_high
@@ -6177,16 +6031,11 @@ def _translate_functions(sql: str) -> str:
     # over the sorted value list; non-median levels are refused (CH's
     # general-level index rule is implementation-internal, and
     # quantileExact covers the interpolating need)
-    for qlh, idx_1based in (
-        ("quantileExactLow", "CAST((size({s}) + 1) DIV 2 AS INT)"),
-        ("quantileExactHigh", "CAST(size({s}) DIV 2 + 1 AS INT)"),
-        ("medianExactLow", "CAST((size({s}) + 1) DIV 2 AS INT)"),
-        ("medianExactHigh", "CAST(size({s}) DIV 2 + 1 AS INT)"),
-    ):
+    def _exact_low_high_pass(sql: str, qlh: str, idx_1based: str) -> str:
         while True:
             at = _find_call(sql, qlh)
             if at < 0:
-                break
+                return sql
             open1 = sql.index("(", at)
             end1 = _balanced(sql, open1)
             rest = sql[end1:].lstrip()
@@ -6216,58 +6065,70 @@ def _translate_functions(sql: str) -> str:
                 ),
             )
             sql = sql[:at] + rep + sql[end2:]
+
+    for qlh, idx_1based in (
+        ("quantileExactLow", "CAST((size({s}) + 1) DIV 2 AS INT)"),
+        ("quantileExactHigh", "CAST(size({s}) DIV 2 + 1 AS INT)"),
+        ("medianExactLow", "CAST((size({s}) + 1) DIV 2 AS INT)"),
+        ("medianExactHigh", "CAST(size({s}) DIV 2 + 1 AS INT)"),
+    ):
+        _pass(_exact_low_high_pass, qlh, idx_1based)
     # quantileGK(accuracy, level)(x): CH's Greenwald-Khanna sketch IS the
     # algorithm behind Spark's percentile_approx — a direct map
-    while True:
-        at = _find_call(sql, "quantilesGK")
-        if at < 0:
-            at2 = _find_call(sql, "quantileGK")
-            if at2 < 0:
-                break
-            at, plural = at2, False
-        else:
-            plural = True
-        open1 = sql.index("(", at)
-        end1 = _balanced(sql, open1)
-        rest = sql[end1:].lstrip()
-        if not rest.startswith("("):
-            raise ChTranslationError(
-                "quantileGK requires the (accuracy, level…)(x) form"
-            )
-        open2 = end1 + (len(sql[end1:]) - len(rest))
-        end2 = _balanced(sql, open2)
-        params = [
-            _translate_functions(p)
-            for p in _split_args(sql[open1 + 1 : end1 - 1])
-        ]
-        if len(params) < 2:
-            raise ChTranslationError(
-                "quantileGK takes (accuracy, level…)(x)"
-            )
-        x = _translate_functions(sql[open2 + 1 : end2 - 1]).strip()
-        acc, levels = params[0], params[1:]
-        if plural or len(levels) > 1:
-            lv = f"array({', '.join(levels)})"
-        else:
-            lv = levels[0]
-        rep = f"percentile_approx({x}, {lv}, CAST({acc} AS INT))"
-        sql = sql[:at] + rep + sql[end2:]
+    def _quantile_gk_pass(sql: str) -> str:
+        while True:
+            at = _find_call(sql, "quantilesGK")
+            if at < 0:
+                at2 = _find_call(sql, "quantileGK")
+                if at2 < 0:
+                    break
+                at, plural = at2, False
+            else:
+                plural = True
+            open1 = sql.index("(", at)
+            end1 = _balanced(sql, open1)
+            rest = sql[end1:].lstrip()
+            if not rest.startswith("("):
+                raise ChTranslationError(
+                    "quantileGK requires the (accuracy, level…)(x) form"
+                )
+            open2 = end1 + (len(sql[end1:]) - len(rest))
+            end2 = _balanced(sql, open2)
+            params = [
+                _translate_functions(p)
+                for p in _split_args(sql[open1 + 1 : end1 - 1])
+            ]
+            if len(params) < 2:
+                raise ChTranslationError(
+                    "quantileGK takes (accuracy, level…)(x)"
+                )
+            x = _translate_functions(sql[open2 + 1 : end2 - 1]).strip()
+            acc, levels = params[0], params[1:]
+            if plural or len(levels) > 1:
+                lv = f"array({', '.join(levels)})"
+            else:
+                lv = levels[0]
+            rep = f"percentile_approx({x}, {lv}, CAST({acc} AS INT))"
+            sql = sql[:at] + rep + sql[end2:]
+        return sql
+
+    _on("quantilesGK quantileGK", _quantile_gk_pass)
     # splitByRegexp(re, s): CH puts the pattern FIRST (like splitByChar)
-    sql = _rewrite_calls(sql, "splitByRegexp", lambda a: f"split({a[1]}, {a[0]})")
-    sql = _rewrite_calls(sql, "arrayWithConstant", lambda a: f"array_repeat({a[1]}, {a[0]})")
-    sql = _rewrite_calls(sql, "arrayIntersect", _array_intersect)
-    sql = _rewrite_calls(sql, "arrayCompact", _array_compact)
-    sql = _rewrite_calls(sql, "arrayResize", _array_resize)
-    sql = _rewrite_calls(sql, "arrayCumSum", _array_cumsum)
-    sql = _rewrite_calls(sql, "arrayReduceInRanges", _array_reduce_in_ranges)
-    sql = _rewrite_calls(sql, "arrayReduce", _array_reduce)
+    _call("splitByRegexp", lambda a: f"split({a[1]}, {a[0]})")
+    _call("arrayWithConstant", lambda a: f"array_repeat({a[1]}, {a[0]})")
+    _call("arrayIntersect", _array_intersect)
+    _call("arrayCompact", _array_compact)
+    _call("arrayResize", _array_resize)
+    _call("arrayCumSum", _array_cumsum)
+    _call("arrayReduceInRanges", _array_reduce_in_ranges)
+    _call("arrayReduce", _array_reduce)
     for ch, dec in [("toDecimal32", 9), ("toDecimal64", 18), ("toDecimal128", 38)]:
-        sql = _rewrite_calls(
-            sql, ch, lambda a, p=dec: f"CAST({a[0]} AS DECIMAL({p}, {a[1].strip()}))"
+        _call(
+            ch, lambda a, p=dec: f"CAST({a[0]} AS DECIMAL({p}, {a[1].strip()}))"
         )
     # identity wrappers: CH-engine artifacts with no Spark meaning
     for noop in ("assumeNotNull", "toNullable", "materialize"):
-        sql = _rewrite_calls(sql, noop, lambda a: f"({a[0]})")
+        _call(noop, lambda a: f"({a[0]})")
 
     def _multi_if(args: list[str]) -> str:
         if len(args) < 3 or len(args) % 2 == 0:
@@ -6278,20 +6139,17 @@ def _translate_functions(sql: str) -> str:
         parts.append(f"ELSE {args[-1]} END")
         return " ".join(parts)
 
-    sql = _rewrite_calls(sql, "multiIf", _multi_if)
+    _call("multiIf", _multi_if)
     # groupArray(N)(x) / groupUniqArray(N)(x): the capped combinator form
     # → slice of the full aggregate.  Plain one-group calls fall through
     # to the rename below.  (Element order matches CH's contract exactly:
     # both leave it unspecified under parallel aggregation.)
-    for ch, spark_agg in (
-        ("groupArray", "collect_list"),
-        ("groupUniqArray", "collect_set"),
-    ):
+    def _capped_group_array_pass(sql: str, ch: str, spark_agg: str) -> str:
         pos = 0
         while True:
             at = _find_call(sql, ch, pos)
             if at < 0:
-                break
+                return sql
             open1 = sql.index("(", at)
             end1 = _balanced(sql, open1)
             rest = sql[end1:].lstrip()
@@ -6309,27 +6167,15 @@ def _translate_functions(sql: str) -> str:
             rep = f"slice({spark_agg}({x}), 1, {n_raw})"
             sql = sql[:at] + rep + sql[end2:]
             pos = at + len(rep)
+
+    for ch, spark_agg in (
+        ("groupArray", "collect_list"),
+        ("groupUniqArray", "collect_set"),
+    ):
+        _pass(_capped_group_array_pass, ch, spark_agg)
     for ch, spark in _RENAMES.items():
-        sql = _rename_calls(sql, ch, spark)
-    return sql
-
-
-def _rename_calls(sql: str, name: str, new: str) -> str:
-    """Rename ``name(`` call sites to ``new(`` using the same
-    string-literal-aware scanner as every other rewrite — a bare re.sub
-    would also rewrite occurrences INSIDE quoted data values."""
-    if name not in sql:  # r14: C-level gate before any loop machinery
-        return sql
-    pos = 0
-    while True:
-        at = _find_call(sql, name, pos)
-        if at < 0:
-            return sql
-        end = at + len(name)
-        while sql[end] != "(":  # skip whitespace between name and paren
-            end += 1
-        sql = sql[:at] + new + sql[end:]
-        pos = at + len(new)
+        _call(ch, spark)
+    return rules
 
 
 # textual array-producer patterns: when empty()/notEmpty()'s argument is
@@ -6343,21 +6189,26 @@ _ARRAY_PRODUCERS = re.compile(
 )
 
 
-# catalog context for the current translate_ch_sql call: lower-cased names
-# of columns KNOWN (from registered table schemas) to be arrays — lets
-# empty()/notEmpty() pick size() for bare array columns, which pure text
-# sniffing cannot type.  Set/reset by translate_ch_sql; single-threaded per
-# call like the rest of this text pipeline.
-_ARRAY_COLUMNS: frozenset[str] = frozenset()
+class _Catalog(NamedTuple):
+    """Catalog context of the current ``translate_ch_sql`` call."""
 
-# catalog context #2: table → ORDERABLE column names in schema order (maps
-# excluded — Spark cannot sort them), for the ANY JOIN survivor tie-break
-_TABLE_COLUMNS: dict[str, list[str]] = {}
+    # lower-cased names of columns KNOWN (from registered table schemas)
+    # to be arrays — lets empty()/notEmpty() pick size() for bare array
+    # columns, which pure text sniffing cannot type
+    arrays: frozenset = frozenset()
+    # table → ORDERABLE column names in schema order (maps excluded —
+    # Spark cannot sort them), for the ANY JOIN survivor tie-break
+    tables: Mapping = MappingProxyType({})
+    # columns KNOWN to be strings — gates the byte-hash family
+    # (sipHash64/xxHash64/xxHash32), whose CH semantics depend on the
+    # argument's binary width
+    strings: frozenset = frozenset()
 
-# catalog context #3: columns KNOWN to be strings — gates the byte-hash
-# family (sipHash64/xxHash64/xxHash32), whose CH semantics depend on the
-# argument's binary width
-_STRING_COLUMNS: frozenset[str] = frozenset()
+
+# per call and per thread/task: concurrent translations each see their
+# own catalog
+_CATALOG: ContextVar[_Catalog] = ContextVar("chdialect_catalog",
+                                            default=_Catalog())
 
 
 def _orderable(dt) -> bool:
@@ -6426,7 +6277,7 @@ def _len_expr(arg: str, str_fn: str = "length") -> str:
     arrays); Spark's ``length`` is string-only and ``size`` is
     array-only.  Pick by sniffing the argument: expressions built by
     array-producing functions get ``size``, bare columns the catalog
-    context (``_ARRAY_COLUMNS``) knows to be arrays get ``size``,
+    context (``_Catalog.arrays``) knows to be arrays get ``size``,
     everything else ``str_fn`` — ``octet_length`` everywhere (CH
     ``length()`` counts BYTES, lengthUTF8 is the char form; for empty()/
     notEmpty() 0 bytes ⟺ 0 chars, and the byte form is idempotent under
@@ -6436,7 +6287,7 @@ def _len_expr(arg: str, str_fn: str = "length") -> str:
     if _ARRAY_PRODUCERS.match(arg):
         return f"size({arg})"
     bare = re.match(r"^\s*(?:[A-Za-z_]\w*\s*\.\s*)?([A-Za-z_]\w*)\s*$", arg)
-    if bare and bare.group(1).lower() in _ARRAY_COLUMNS:
+    if bare and bare.group(1).lower() in _CATALOG.get().arrays:
         return f"size({arg})"
     return f"{str_fn}({arg})"
 
@@ -9108,7 +8959,7 @@ def _rewrite_brackets(sql: str) -> str:
             key = inner.strip()
             base_is_array = bool(
                 _ARRAY_PRODUCER_RE.match(base)
-                or base.lower() in _ARRAY_COLUMNS
+                or base.lower() in _CATALOG.get().arrays
             )
             if (key.startswith("'") and key.endswith("'")) or re.fullmatch(
                     r"-?\d+", key) or not base_is_array:
@@ -9152,7 +9003,7 @@ def _rewrite_any_join(sql: str, notes: list[str]) -> str:
     """``ANY LEFT/INNER JOIN t [AS a] USING (k…)`` (either keyword order)
     → plain join against the keyed SURVIVOR subquery: one right row per
     join key, picked as the row_number()=1 row ordered by the table's
-    remaining orderable columns (catalog context ``_TABLE_COLUMNS``).
+    remaining orderable columns (catalog context ``_Catalog.tables``).
     ClickHouse's ANY keeps an arbitrary match; a deterministic engine
     must pin one, and min-by-remaining-columns is a valid instance of
     that contract (and the identity when keys are unique — the dimension
@@ -9197,7 +9048,7 @@ def _rewrite_any_join(sql: str, notes: list[str]) -> str:
         kind = (m.group(1) or m.group(2) or "INNER").upper()
         tbl, alias = m.group(3), m.group(4)
         keys = [k.strip() for k in m.group(5).split(",") if k.strip()]
-        cols = _TABLE_COLUMNS.get(tbl)
+        cols = _CATALOG.get().tables.get(tbl)
         if cols is None:
             return sql  # unknown table → the refusal below reports it
         keyset = {k.lower() for k in keys}
@@ -9238,7 +9089,7 @@ def _rewrite_right_any_join(sql: str, notes: list[str]) -> str:
             return sql
         kw, ltbl, lalias, rtbl, ralias, keystr = m.groups()
         keys = [k.strip() for k in keystr.split(",") if k.strip()]
-        cols = _TABLE_COLUMNS.get(ltbl)
+        cols = _CATALOG.get().tables.get(ltbl)
         if cols is None:
             return sql  # unknown left table → the refusal below reports it
         keyset = {k.lower() for k in keys}
@@ -9496,7 +9347,8 @@ def _rewrite_asof_join(sql: str, notes: list[str]) -> str:
         if len(cols) < 2:
             return sql  # need at least one equi-key plus the asof column
         *keys, t = cols
-        a_cols, b_cols = _TABLE_COLUMNS.get(ltbl), _TABLE_COLUMNS.get(rtbl)
+        tables = _CATALOG.get().tables
+        a_cols, b_cols = tables.get(ltbl), tables.get(rtbl)
         if a_cols is None or b_cols is None:
             return sql
         lowkeys = {k.lower() for k in keys} | {t.lower()}
@@ -9689,6 +9541,35 @@ def _reescape_literals(sql: str) -> str:
     return "".join(out)
 
 
+# built here, after every emitter helper the rules reference is defined
+_RULES = _build_rules()
+# call name → indices of the rules it gates, ascending
+_RULE_INDEX: dict[str, list[int]] = {}
+for _i, (_names, _) in enumerate(_RULES):
+    for _n in _names:
+        _RULE_INDEX.setdefault(_n, []).append(_i)
+del _i, _names, _n
+
+
+def _translate_functions(sql: str) -> str:
+    """Apply ``_RULES`` in table order, each only when one of its names is
+    a call site of the current text.  A rule therefore sees the text every
+    earlier rule emitted, and no earlier rule sees a later rule's output.
+    The text is rescanned only after a rule changes it."""
+    nxt = 0
+    while True:
+        names = _call_names(sql)
+        due = sorted({i for n in names for i in _RULE_INDEX.get(n, ())
+                      if i >= nxt})
+        for i in due:
+            out = _RULES[i][1](sql)
+            if out != sql:
+                sql, nxt = out, i + 1
+                break
+        else:
+            return sql
+
+
 def translate_ch_sql(
     sql: str, table_keys=None, array_columns=None, table_columns=None,
     string_columns=None,
@@ -9713,10 +9594,11 @@ def translate_ch_sql(
     ``string_columns`` (optional): column names known from the catalog to
     be strings — admits bare columns under the byte-hash family
     (sipHash64/xxHash64/xxHash32)."""
-    global _ARRAY_COLUMNS, _TABLE_COLUMNS, _STRING_COLUMNS
-    _ARRAY_COLUMNS = frozenset(c.lower() for c in (array_columns or ()))
-    _TABLE_COLUMNS = dict(table_columns or {})
-    _STRING_COLUMNS = frozenset(c.lower() for c in (string_columns or ()))
+    token = _CATALOG.set(_Catalog(
+        frozenset(c.lower() for c in (array_columns or ())),
+        MappingProxyType(dict(table_columns or {})),
+        frozenset(c.lower() for c in (string_columns or ())),
+    ))
     try:
         # FIRST, on the raw input only: rewrites below inject their own
         # (Spark-convention) literals, which must not be re-escaped
@@ -9731,9 +9613,7 @@ def translate_ch_sql(
             f"malformed ClickHouse SQL ({type(e).__name__}: {e})"
         ) from e
     finally:
-        _ARRAY_COLUMNS = frozenset()
-        _TABLE_COLUMNS = {}
-        _STRING_COLUMNS = frozenset()
+        _CATALOG.reset(token)
 
 
 def _translate_ch_sql_inner(sql: str, table_keys) -> tuple[str, list[str]]:
@@ -9771,12 +9651,14 @@ def _translate_ch_sql_inner(sql: str, table_keys) -> tuple[str, list[str]]:
             None,
         )
 
-    for bad in _UNSUPPORTED:
-        if _first_real(rf"\b{bad}\s*\("):
-            hint = f"; use {_redirect[bad]}" if bad in _redirect else ""
-            raise ChTranslationError(
-                f"no faithful Spark translation for {bad}(){hint}"
-            )
+    # the first refused call in the text (a set iteration would make the
+    # reported name depend on the hash seed)
+    bad = next((n for n in _call_names(sql) if n in _UNSUPPORTED), None)
+    if bad:
+        hint = f"; use {_redirect[bad]}" if bad in _redirect else ""
+        raise ChTranslationError(
+            f"no faithful Spark translation for {bad}(){hint}"
+        )
     # the whole H3 family at once (~60 names): Uber's H3 icosahedral
     # indexing needs the H3 library, absent here
     m_h3 = _first_real(r"\b(h3[A-Z]\w*|stringToH3|h3ToString)\s*\(")
@@ -10056,16 +9938,15 @@ def _translate_ch_sql_inner(sql: str, table_keys) -> tuple[str, list[str]]:
     sql = _rewrite_array_join(sql)
     sql = _rewrite_limit_with_ties(_rewrite_limit_by(sql))
     out = _translate_functions(_rewrite_brackets(sql))
-    if _find_call(out, "round") >= 0:
+    out_names = _call_names(out)
+    if "round" in out_names:
         notes.append(
             "round(): Spark rounds exact halves away from zero; CH"
             " banker's-rounds Float arguments at exact halfway points"
             " (CH rounds Decimals away from zero, matching Spark) —"
             " roundBankers() gives CH float behavior explicitly"
         )
-    used_udfs = sorted(
-        n for n in CH_UDF_NAMES if _find_call(out, n) >= 0
-    )
+    used_udfs = sorted(n for n in out_names if n in CH_UDF_NAMES)
     if used_udfs:
         notes.append(
             "Arrow-UDF-backed scalars: " + ", ".join(used_udfs)

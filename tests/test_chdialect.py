@@ -5111,32 +5111,117 @@ def test_wkt_render_refusal_notation_evidence():
 
 
 def test_scanner_fast_gate_preserves_semantics():
-    """r14: _find_call and the per-name pass helpers short-circuit through
-    a C-level str.find before any regex machinery.  The gate is a superset
-    test (substring presence), so it must never change what the precise
-    word-boundary scanner finds — in particular a name embedded in a
-    LONGER identifier or only inside a string literal still rewrites
-    nothing, and a real call site after such decoys still rewrites."""
+    """The translator gates every rule on ``_call_names`` — one scan for
+    the names called outside string literals.  The gate must find exactly
+    the call sites the word-boundary scanner ``_find_call`` finds: a name
+    embedded in a LONGER identifier or only inside a string literal is no
+    call, and a real call site after such decoys still rewrites."""
     from clickhouse_sinker_spark.functions.chdialect import (
+        _call_names,
         _find_call,
-        _rename_calls,
         _rewrite_calls,
     )
 
-    # absent name: identity (and the gate returns the same object)
+    # absent name: identity
     s = "SELECT a, b FROM t"
-    assert _rewrite_calls(s, "any", lambda a: "FIRST(" + a[0] + ")") is s
+    assert _rewrite_calls(s, "any", lambda a: "FIRST(" + a[0] + ")") == s
     assert _find_call(s, "any") == -1
+    assert not _call_names(s)
     # present only as a suffix of a longer identifier: no match
     assert _find_call("SELECT many(x) FROM t", "any") == -1
+    assert list(_call_names("SELECT many(x) FROM t")) == ["many"]
     # present only inside a string literal: no match
     assert _find_call("SELECT 'any(' FROM t", "any") == -1
+    assert not _call_names("SELECT 'any(' FROM t")
     # decoys first, real call later: found at the right offset
     s2 = "SELECT many(x), 'any(', any(y) FROM t"
     at = _find_call(s2, "any")
     assert s2[at:at + 4] == "any("
-    assert _rename_calls(s2, "any", "first") == (
+    assert list(_call_names(s2)) == ["many", "any"]
+    # a str emit renames the call site
+    assert _rewrite_calls(s2, "any", "first") == (
         "SELECT many(x), 'any(', first(y) FROM t"
     )
+    # the cast operator counts outside literals only
+    assert "::" in _call_names("SELECT x::Int64 FROM t")
+    assert "::" not in _call_names("SELECT 'x::Int64' FROM t")
     # start-offset anchoring still honors the historical slice semantics
     assert _find_call("xany(1)", "any", 1) == 1
+
+
+@settings_chd(max_examples=300, deadline=None)
+@given_chd(st_chd.lists(st_chd.sampled_from(
+    ["any", "many", "any_x", "x", "1", "(", ")", " ", "'", "''", ".", ",",
+     "é", "\n", "::"]), max_size=14))
+def test_call_names_agree_with_find_call(parts):
+    """``_call_names`` holds a name exactly when ``_find_call`` finds a
+    call site of it — the membership every rule gate relies on."""
+    from clickhouse_sinker_spark.functions.chdialect import (
+        _call_names,
+        _find_call,
+    )
+
+    sql = "".join(parts)
+    names = _call_names(sql)
+    for n in ("any", "many", "any_x", "x", "1", "é"):
+        assert (n in names) == (_find_call(sql, n) >= 0), (sql, n)
+
+
+def test_refusal_names_first_refused_call_under_any_hash_seed():
+    """Two refused calls in one query: the message names the one that
+    comes first in the text, whatever the interpreter's hash seed (the
+    refused-name table is a set, so iterating it picked a seed-dependent
+    one)."""
+    import os
+    import subprocess
+    import sys
+
+    prog = (
+        "from clickhouse_sinker_spark.functions.chdialect import ("
+        "ChTranslationError, translate_ch_sql)\n"
+        "try:\n"
+        "    translate_ch_sql('SELECT runningDifference(value),"
+        " neighbor(value, 1), rowNumberInBlock() FROM events')\n"
+        "except ChTranslationError as e:\n"
+        "    print(e)\n"
+    )
+    msgs = set()
+    for seed in ("0", "1", "2", "3", "4"):
+        out = subprocess.run(
+            [sys.executable, "-c", prog], capture_output=True, text=True,
+            check=True, env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout.strip()
+        msgs.add(out)
+    assert len(msgs) == 1, msgs
+    assert msgs.pop().startswith(
+        "no faithful Spark translation for runningDifference()")
+
+
+def test_catalog_context_isolated_between_threads():
+    """The catalog arguments of one translate_ch_sql call must not leak
+    into, or be reset under, a concurrent call on another thread."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from clickhouse_sinker_spark.functions.chdialect import translate_ch_sql
+
+    sql = "SELECT notEmpty(tags) FROM documents"
+    want = {
+        True: translate_ch_sql(sql, array_columns={"tags"})[0],
+        False: translate_ch_sql(sql)[0],
+    }
+    assert want[True] != want[False]
+
+    def run(typed: bool) -> list[bool]:
+        arr = {"tags"} if typed else None
+        return [translate_ch_sql(sql, array_columns=arr)[0] == want[typed]
+                for _ in range(40)]
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(4) as ex:
+            results = list(ex.map(run, [True, False] * 4))
+    finally:
+        sys.setswitchinterval(old)
+    assert all(all(r) for r in results)
