@@ -74,11 +74,12 @@ def _grouped_band_join(df: DataFrame) -> bool:
     RDD-backed frames report Long.MaxValue) choose the grouped shape —
     the scale-safe default, the same convention by which Spark refuses to
     broadcast a relation of unknown size."""
-    limit = int(
-        df.sparkSession.conf.get(
-            _LSH_GROUPED_BYTES_CONF, str(_LSH_GROUPED_BYTES_DEFAULT)
-        )
-    )
+    raw = df.sparkSession.conf.get(
+        _LSH_GROUPED_BYTES_CONF, str(_LSH_GROUPED_BYTES_DEFAULT))
+    try:
+        limit = int(raw)
+    except ValueError:  # malformed conf (e.g. '2MB'): keep the default
+        limit = _LSH_GROUPED_BYTES_DEFAULT
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # noqa: BLE001 — estimate is advisory only

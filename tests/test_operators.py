@@ -161,9 +161,13 @@ def test_minhash_band_join_shapes_identical(spark):
     # stats as Long.MaxValue, so the limit must sit ABOVE MaxValue
     joined, plan_j = run(str(1 << 64))
     grouped, plan_g = run("0")           # force grouped aggregation
+    # a malformed value falls back to the 2 MiB default, which the
+    # unknown-stats input crosses: the grouped shape
+    malformed, plan_m = run("2MB")
     # the conf actually switched the physical shape
     assert "collect_list" not in plan_j and "collect_list" in plan_g
-    assert joined == grouped and len(joined) >= 7
+    assert "collect_list" in plan_m
+    assert joined == grouped == malformed and len(joined) >= 7
     # doubles bit-identical, not just repr-equal
     import struct
 
