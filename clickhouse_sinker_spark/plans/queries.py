@@ -10581,78 +10581,70 @@ def curation_persisted(spark: SparkSession, sf_dir: str):
 # It never changes between two calls in the same checkout; any change to it
 # is an ordinary reviewed source edit.
 #
-# Layout of ``DRIVER_ORDER`` (round 13: staleness rotation per VERDICT r12
-# order #1 — the window is the 48-query r09-latest block, exactly 3 rounds
-# stale, PLUS the two r12-staged queries registered this round
-# (``ivfpq_topk``, ``pipeline_pack_bpe``) in the 2 remaining slots,
-# front-loaded because they are first-time hashes).  This brings the
-# registry to 200 = 50 x 4: from r14 onward every rotation block is a
-# full 50-query window with ZERO free slots — all further capability is
-# library-tier (pytest-only) by construction, and max hash age can never
-# exceed 3 as long as each round's window is exactly the
-# oldest-latest-green block (see tests/test_driver_rotation.py::
-# test_post_cap_rotation_calendar_closes).
-# Order within the r09 block is ``tools/driver_coverage.py``'s reported
-# order for that block.  After this round's run the latest-green
-# distribution becomes 50 r10 / 50 r11 / 50 r12 / 50 r13 -> max hash age
-# stays <= 3.  Every remaining registered query follows in registration
-# (source) order.  Nothing is ever unregistered — ALL queries are
-# pytest-oracle-checked on every test run regardless of position.
+# Layout of ``DRIVER_ORDER``: the registry is capped at 200 = 50 x 4, so
+# every round's window is exactly the oldest-latest-green 50-query block
+# and max hash age stays <= 3 (see tests/test_driver_rotation.py::
+# test_post_cap_rotation_calendar_closes).  Current window: the r10-latest
+# block (the stalest; r14's run repeated the r13 window instead of
+# rotating), in ``tools/driver_coverage.py``'s reported order for that
+# block.  Next rotations: the r11 block, then r12, then r14.  Every
+# remaining registered query follows in registration (source) order.
+# Nothing is ever unregistered — ALL queries are pytest-oracle-checked on
+# every test run regardless of position.
 # ---------------------------------------------------------------------------
 
 DRIVER_ORDER: list[str] = [
-    # --- first-time hashes: the two r12-staged queries (front-loaded) ---
-    "ivfpq_topk",
-    "pipeline_pack_bpe",
-    # --- the r09-latest block (oldest hashes in the registry, age 3) ---
-    "tpch_q1_pricing",
-    "window_tumbling_1h",
-    "etl_default_on_error",
-    "etl_datetime_layouts",
-    "etl_null_reject",
-    "etl_dedup_offsets",
-    "etl_schema_infer_keys",
-    "series_latest_per_key",
-    "series_labels_json",
-    "dedup_exact_docs",
-    "text_quality",
-    "agg_rollup",
-    "etl_map_explode",
-    "asof_join_events",
-    "etl_csv_parse",
-    "tpch_q18_having",
-    "window_session_agg",
-    "range_join_recent_events",
-    "funnel_window_3step",
-    "agg_salted_user_stats",
-    "knn_kmeans_assign",
-    "mm_bmp_decode_real",
-    "mm_wav_features_real",
-    "quality_gopher_rules",
-    "dedup_passage_ccnet",
-    "knn_pq_topk",
-    "seq_match_funnel",
-    "cohort_weekly_retention",
-    "ch_dialect_decay_window",
-    "ch_dialect_auc",
-    "ch_dialect_pip",
-    "ch_dialect_idna",
-    "ch_dialect_ngram",
-    "text_langid_trigram",
-    "ch_dialect_siphash_keyed",
-    "ch_dialect_tuple_arith",
-    "ch_dialect_checksums",
-    "ch_dialect_stem",
-    "corpus_datasheet",
-    "knn_ivf_recall",
-    "pipeline_train_val_split",
-    "pipeline_chunk_windows",
-    "text_bigram_lm_score",
-    "corpus_lang_drift",
-    "dedup_embedding_srp",
-    "pipeline_bpe_train_merges",
-    "text_pagerank_keywords",
-    "corpus_zipf_stats",
+    # --- the r10-latest block (oldest hashes in the registry) ---
+    "ts_ohlc_hourly",
+    "ts_counter_increase",
+    "window_range_trailing_hour",
+    "emb_quantize_int8",
+    "knn_range_search",
+    "dedup_incremental_minhash",
+    "pipeline_split_assign",
+    "pipeline_chunk_documents",
+    "dedup_components_star",
+    "knn_ivf_trained",
+    "asof_join_tolerance",
+    "tpch_q4_semijoin",
+    "tpch_q12_case_agg",
+    "window_moving_avg",
+    "tpch_q7_nation_volume",
+    "tpch_q8_market_share",
+    "tpch_q10_returns",
+    "tpch_q13_custdist",
+    "tpch_q14_promo",
+    "tpch_q15_top_supplier",
+    "tpch_q16_supplier_cnt",
+    "tpch_q17_small_qty",
+    "tpch_q19_disjunctive",
+    "tpch_q22_idle_customers",
+    "tpch_q2_top_supplier_region",
+    "window_cumulative_revenue",
+    "window_lag_delta",
+    "agg_cube_orders",
+    "agg_pivot_status",
+    "funnel_signup_purchase",
+    "retention_next_day",
+    "agg_percentile_qty",
+    "dedup_semantic_clusters",
+    "tpch_q11_important_stock",
+    "tpch_q20_top_shippers",
+    "tpch_q21_last_shipper",
+    "ch_dialect_assoc2",
+    "ch_dialect_kstest",
+    "ch_dialect_summap_overflow",
+    "ch_dialect_geo_cells",
+    "ch_dialect_lttb",
+    "ch_dialect_array_split",
+    "ch_dialect_final",
+    "ch_dialect_window_funnel",
+    "ch_dialect_funnel_strict",
+    "ch_dialect_retention",
+    "ch_dialect_sequence_match",
+    "corpus_ngram_novelty",
+    "text_bm25_topk",
+    "pipeline_ccnet_buckets",
 ]
 
 DRIVER_WINDOW = 50
