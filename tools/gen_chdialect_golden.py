@@ -107,8 +107,6 @@ def _catalog() -> dict:
 
     from clickhouse_sinker_spark.functions.chdialect import spark_catalog_info
     from clickhouse_sinker_spark.sources.tables import load_table
-
-    sys.path.insert(0, ROOT)
     from tests.conftest import SF_DIR
 
     spark = SparkSession.builder.master("local[2]").getOrCreate()
@@ -135,7 +133,7 @@ def _inputs() -> dict:
     for i, sql in enumerate(EDGE_CASES):
         entries.append({"id": f"edge_{i}", "sql": sql})
     keys = set()
-    for i, rec in enumerate(_capture_test_inputs()):
+    for rec in _capture_test_inputs():
         key = json.dumps(rec, sort_keys=True)
         if key not in keys:
             keys.add(key)
